@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Paired A/B measurement harness (optimization guide §1: measure, and
   * measure in a way the box's noise cannot fake). The shared box swings
   * per-query walls by ±40% BETWEEN bench invocations (observed on the
@@ -26,19 +24,8 @@ object AB {
     val confKey = sys.env.getOrElse("SPARK_GRAFT_AB_CONF",
       "spark.graft.par.wide.enabled")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names
-      .filter(n => new java.io.File(s"$sfDir/$n.parquet").exists())
-      .foreach(n => Tables.t(spark, sfDir, n).count())
+    val spark = Harness.session()
+    Harness.warmTables(spark, sfDir)
     val fns = SparkEntry.queries
 
     def time(name: String, arm: Boolean): Double = {

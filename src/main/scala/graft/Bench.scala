@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -14,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // Warm-engine methodology, as the reference's own protocol
     // prescribes (BASELINE.md: 10 iterations against a warm engine,
@@ -34,13 +23,7 @@ object Bench {
     // spike on the shared box then perturbs one pass, not the verdict
     // (round-2 driver run measured 40× one-pass outliers on queries
     // that bench at 1–2 s on an idle machine).
-    // partial SF dirs are legal for targeted runs (the sf10 scale
-    // proof generates only the corpora its families read) — warm what
-    // exists; a query against a genuinely missing table still fails
-    // loudly in its own timed slot
-    Tables.names
-      .filter(n => new java.io.File(s"$sfDir/$n.parquet").exists())
-      .foreach(n => Tables.t(spark, sfDir, n).count())
+    Harness.warmTables(spark, sfDir)
     // (time, succeeded) per query. clearCache() before EVERY timed query:
     // operators persist frames internally (dedup index, CC labels, IVF
     // centroids), and Spark's CacheManager serves any later query whose

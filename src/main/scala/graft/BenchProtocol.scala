@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The reference's query-latency protocol (SURVEY A11 / BASELINE.md): 10
   * iterations against a warm engine, discard the first 2, report
   * p50/p95/p99/mean per query. Runs the four headline analytics queries
@@ -23,16 +21,7 @@ object BenchProtocol {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val names = if (args.length > 1) args.drop(1).toSeq else HEADLINE
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def pct(sorted: Seq[Double], p: Double): Double =
       sorted((p * (sorted.size - 1)).round.toInt)

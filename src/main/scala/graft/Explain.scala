@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan for the
   * named queries (or a default set of scale-critical ones) so pushdown,
   * broadcast choice, and whole-stage-codegen coverage can be reviewed —
@@ -17,14 +15,7 @@ object Explain {
         "q07_topk", "q08_dedup_rownum", "p02_gold_daily", "d03_minhash_lsh",
         "v01_ann_bruteforce_topk", "q35_multi_distinct", "q36_rank_suite",
         "s04_sequence_packing", "v05_ann_quantized_topk", "x10_asof_exec")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // SPARK_GRAFT_CONF="k=v;k=v" — session confs for plan A/B captures
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv =>

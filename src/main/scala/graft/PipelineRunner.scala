@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Medallion
@@ -23,14 +22,7 @@ object PipelineRunner {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val work = args.lift(1).getOrElse(
       Files.createTempDirectory("graft-pipeline").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     // Stage 0: land raw events as the incoming file stream — only once.
     // A re-land under a new file name would look like a producer replay

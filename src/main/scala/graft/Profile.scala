@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement harness (optimization guide §1): runs named queries under
   * the exact Bench session/config and breaks each wall second into
@@ -18,16 +17,7 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
@@ -61,9 +51,7 @@ object Profile {
       Seq(taskMs, gcMs, shufR, shufW, spill, input).foreach(_.set(0))
     }
 
-    Tables.names
-      .filter(n => new java.io.File(s"$sfDir/$n.parquet").exists())
-      .foreach(n => Tables.t(spark, sfDir, n).count())
+    Harness.warmTables(spark, sfDir)
 
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.catalog.map(_.name)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-proof instrumentation: measures, at a given SF directory, the
@@ -16,14 +15,7 @@ import org.apache.spark.sql.functions._
 object ScaleProof {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft-sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import graft.operators.Dedup
 
     val docs = Tables.t(spark, sfDir, "documents")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus amplifier: writes an N× copy of a testdata
@@ -59,14 +59,7 @@ object ScaleUp {
         "105; embedding rotations repeat past 2·dim = 128)")
     val onlyTables: Option[Set[String]] =
       args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def keySpan(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).head().getLong(0) + 1

@@ -9,27 +9,12 @@ import org.apache.spark.sql.functions._
   * `summarize` rolls a suite into one (check_name, violations) table.
   *
   * Checks are plain filters/aggregations — Catalyst pushes them into the
-  * scan, and a suite over one table can share the scan via one pass.
+  * scan, and `summarizeConditions` runs a suite of row predicates over
+  * one table in a single pass.
   */
 object DataQuality {
 
   final case class Check(name: String, violations: DataFrame)
-
-  def notNull(df: DataFrame, c: String): DataFrame =
-    df.filter(col(c).isNull)
-
-  def unique(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.groupBy(cols.map(col): _*).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-
-  def acceptedValues(df: DataFrame, c: String, values: Seq[Any]): DataFrame =
-    df.filter(!col(c).isin(values: _*) || col(c).isNull)
-
-  def acceptedRange(df: DataFrame, c: String, lo: Any, hi: Any): DataFrame =
-    df.filter(col(c) < lit(lo) || col(c) > lit(hi))
-
-  def positiveValue(df: DataFrame, c: String): DataFrame =
-    df.filter(col(c) < 0)
 
   /** FK `relationships` test: child keys with no parent (anti-join). */
   def relationships(child: DataFrame, childKey: String,
@@ -73,6 +58,7 @@ object DataQuality {
     * predicate evaluates to true on (null ⇒ dropped ⇒ not counted). */
   def summarizeConditions(df: DataFrame,
       checks: Seq[(String, Column)]): DataFrame = {
+    require(checks.nonEmpty, "summarizeConditions needs at least one check")
     val aggs = checks.zipWithIndex.map { case ((_, cond), i) =>
       coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as(s"c$i")
     }

@@ -152,9 +152,7 @@ object Dedup {
     // (the d02 index-build shape: the persist materializes once, so only
     // that one explode is widened; `shingled` above stays un-widened —
     // widening the signature path A/B'd 1.54× slower in round 14)
-    val verifySrc = if (docs.sparkSession.conf
-        .get("spark.graft.d03.wide", "true").toBoolean) Par.wide(docs) else docs
-    jaccardFor(cand, shingleSets(verifySrc, idCol, textCol), idCol)
+    jaccardFor(cand, shingleSets(Par.wide(docs), idCol, textCol), idCol)
       .filter(col("jaccard") >= threshold)
   }
 
@@ -295,25 +293,12 @@ object Dedup {
       statsSampleRate: Double = 1.0,
       hotDfCap: Int = 100,
       hotFraction: Double = 0.5): DataFrame = {
-    // conf-gated for A/B measurement (graft.AB): false = the
-    // pre-round-14 shape whose decision pass re-derived the shingles
-    val reuse = docs.sparkSession.conf
-      .get("spark.graft.d02.reuseIndex", "true").toBoolean
-    if (!reuse) {
-      return if (ngramPlanChoosesPrefix(docs, idCol, textCol, k,
-          maxDirectPairs, statsSampleRate, hotDfCap, hotFraction))
-        ngramJaccardPairsPrefix(docs, idCol, textCol, threshold, k)
-      else
-        ngramJaccardPairs(docs, idCol, textCol, threshold, k)
-    }
     // widened ahead of the shingle explode that materializes the ONE
     // persisted index (guide §2.5: the shingle expression is per-row
     // heavy and the scan unsplittable; Par.wide no-ops at realistic
     // layouts). Narrow by design: only the index build widens — the
     // blanket shingle-site widening A/B'd slower in round 14.
-    val src = if (docs.sparkSession.conf
-        .get("spark.graft.d02.wide", "true").toBoolean) Par.wide(docs) else docs
-    val ex = invertedIndex(shingleSets(src, idCol, textCol, k), idCol)
+    val ex = invertedIndex(shingleSets(Par.wide(docs), idCol, textCol, k), idCol)
     val (candVolume, hotVolume) = volumesFromExploded(
       ex.select(col(idCol), col("s")), idCol, statsSampleRate, hotDfCap)
     if (candVolume > maxDirectPairs &&
@@ -462,18 +447,10 @@ object Dedup {
     // from the same single aggregate that enumerates the ids — so the
     // loop starts one round ahead (one join + one convergence count
     // saved; star-shaped dup clusters converge in the very next check).
-    // Conf-gated for A/B measurement (graft.AB); both seeds reach the
-    // identical fixpoint.
-    val seedMinNbr = pairs.sparkSession.conf
-      .get("spark.graft.cc.seedMinNeighbor", "true").toBoolean
     var cached = graft.CacheScope.persist(
-      if (seedMinNbr)
-        edges.groupBy(col("a").as("id"))
-          .agg(min(col("b")).as("mb"))
-          .select(col("id"), least(col("id"), col("mb")).as("lbl"))
-      else
-        edges.select(col("a").as("id")).distinct()
-          .withColumn("lbl", col("id")))
+      edges.groupBy(col("a").as("id"))
+        .agg(min(col("b")).as("mb"))
+        .select(col("id"), least(col("id"), col("mb")).as("lbl")))
     var labels = cached
     var iter = 0
     var converged = false
@@ -605,12 +582,10 @@ object Dedup {
     // (polynomial hash over every char + min-window) is the heaviest
     // per-row stage in the engine, and on an unsplittable scan it runs
     // on one core (guide §2.5; Par.wide no-ops at realistic layouts)
-    val src = if (docs.sparkSession.conf
-        .get("spark.graft.d09.wide", "true").toBoolean) Par.wide(docs) else docs
     // persisted: the occurrence-cap aggregate and both join legs read the
     // positioned fingerprints — three evaluations of the scan without it
     val fps = graft.CacheScope.persist(
-      src.select(col(idCol).as("doc_id"),
+      Par.wide(docs).select(col(idCol).as("doc_id"),
           explode(rolling_fingerprint_pos(col(textCol), window, stride)).as("sp"))
         .select(col("doc_id"), col("sp.fp").as("fp"), col("sp.pos").as("p")))
     val hot = fps.groupBy("fp").agg(count(lit(1)).as("occ"))

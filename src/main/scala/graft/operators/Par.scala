@@ -53,7 +53,13 @@ object Par {
     val spark = df.sparkSession
     // kill switch for A/B measurement (graft.AB) and for deployments
     // whose input layout never degenerates — scale behavior is already
-    // a no-op via the split estimate below
+    // a no-op via the split estimate below. It is the only switch that
+    // turns widening off (g04 alone keeps its own `g04.opt` gate). Risk
+    // it guards: `optimizedPlan.stats` can UNDERESTIMATE a filtered or
+    // joined input (selectivity and join-size guesses, not file bytes),
+    // and an underestimate of a large input forces a full round-robin
+    // shuffle of it. The widening operators take caller-supplied
+    // frames, so such an input can reach this estimate.
     if (!spark.conf.get("spark.graft.par.wide.enabled", "true").toBoolean)
       return df
     val target = spark.sparkContext.defaultParallelism

@@ -231,15 +231,22 @@ object CoreQueries {
 
   // ---------------------------------------------------------------- q10
   // W4 percent-of-total: window over an already-aggregated 5-row frame.
+  // The percentage rounds half-up to 2 dp in INTEGER arithmetic on both
+  // engines: ⌊(n·20000 + total) / (2·total)⌋ / 100. Rounding a DOUBLE
+  // quotient instead splits on exact ties — a 20.275 % share is
+  // 20.274999… as a double, which DuckDB rounds to 20.27 and Spark (via
+  // the shortest round-tripping decimal) to 20.28.
   val q10PctOfTotal: Q = Q(
     "q10_pct_of_total",
     """SELECT event_type, COUNT(*) AS n,
-      |  ROUND(COUNT(*) * 100.0 / SUM(COUNT(*)) OVER (), 2) AS pct
+      |  (COUNT(*) * 20000 + SUM(COUNT(*)) OVER ())
+      |    // (2 * SUM(COUNT(*)) OVER ()) / 100.0 AS pct
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
     val counts = ev(s, d).groupBy("event_type").agg(count(lit(1)).as("n"))
     graft.operators.ScalableWindow.withGlobalShare(
         counts, sum(col("n")), "pct",
-        (_, total) => round(col("n") * lit(100.0) / total, 2))
+        (_, total) => call_function("div",
+          col("n") * lit(20000L) + total, total * lit(2L)) / lit(100.0))
       .orderBy("event_type")
   }
 

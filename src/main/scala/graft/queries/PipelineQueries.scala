@@ -119,42 +119,30 @@ object PipelineQueries {
     import DataQuality._
     val ev = t(s, d, "events"); val li = t(s, d, "lineitem")
     val eventTypes = Seq("click", "view", "purchase", "signup", "error")
-    if (!s.conf.get("spark.graft.dq.fuse", "true").toBoolean)
-      summarize(Seq(
-        Check("events_type_accepted",
-          acceptedValues(ev, "event_type", eventTypes)),
-        Check("events_user_notnull", notNull(ev, "user_id")),
-        Check("events_value_nonneg", positiveValue(ev, "value")),
-        Check("lineitem_pk_unique", unique(li, Seq("l_orderkey", "l_linenumber"))),
-        Check("lineitem_qty_range", acceptedRange(li, "l_quantity", 1, 50)),
-        Check("orders_custkey_fk", relationships(
-          t(s, d, "orders"), "o_custkey", t(s, d, "customer"), "c_custkey"))))
-    else {
-      // fused (guide §6): the three events checks share ONE scan via a
-      // conditional aggregate (was 3 full passes), and the lineitem qty
-      // check rides the PK-uniqueness groupBy as a partial aggregate
-      // (was 2 passes) — per-check semantics unchanged, so the counts
-      // are identical by construction.
-      val evChecks = summarizeConditions(ev, Seq(
-        "events_type_accepted" ->
-          (!col("event_type").isin(eventTypes: _*) || col("event_type").isNull),
-        "events_user_notnull" -> col("user_id").isNull,
-        "events_value_nonneg" -> (col("value") < 0)))
-      val liChecks = countsToSummary(
-        li.groupBy("l_orderkey", "l_linenumber")
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L)
-              .otherwise(0L)).as("qv"))
-          .agg(
-            coalesce(sum(when(col("n") > 1, 1L).otherwise(0L)), lit(0L)).as("pk"),
-            coalesce(sum("qv"), lit(0L)).as("qty")),
-        Seq("lineitem_pk_unique" -> "pk", "lineitem_qty_range" -> "qty"))
-      val fkCheck = relationships(
-          t(s, d, "orders"), "o_custkey", t(s, d, "customer"), "c_custkey")
-        .agg(count(lit(1)).cast("bigint").as("violations"))
-        .select(lit("orders_custkey_fk").as("check_name"), col("violations"))
-      evChecks.unionAll(liChecks).unionAll(fkCheck).orderBy("check_name")
-    }
+    // fused (guide §6): the three events checks share ONE scan via a
+    // conditional aggregate (was 3 full passes), and the lineitem qty
+    // check rides the PK-uniqueness groupBy as a partial aggregate
+    // (was 2 passes) — per-check semantics unchanged, so the counts
+    // are identical by construction.
+    val evChecks = summarizeConditions(ev, Seq(
+      "events_type_accepted" ->
+        (!col("event_type").isin(eventTypes: _*) || col("event_type").isNull),
+      "events_user_notnull" -> col("user_id").isNull,
+      "events_value_nonneg" -> (col("value") < 0)))
+    val liChecks = countsToSummary(
+      li.groupBy("l_orderkey", "l_linenumber")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L)
+            .otherwise(0L)).as("qv"))
+        .agg(
+          coalesce(sum(when(col("n") > 1, 1L).otherwise(0L)), lit(0L)).as("pk"),
+          coalesce(sum("qv"), lit(0L)).as("qty")),
+      Seq("lineitem_pk_unique" -> "pk", "lineitem_qty_range" -> "qty"))
+    val fkCheck = relationships(
+        t(s, d, "orders"), "o_custkey", t(s, d, "customer"), "c_custkey")
+      .agg(count(lit(1)).cast("bigint").as("violations"))
+      .select(lit("orders_custkey_fk").as("check_name"), col("violations"))
+    evChecks.unionAll(liChecks).unionAll(fkCheck).orderBy("check_name")
   }
 
   // ---------------------------------------------------------------- dq02
@@ -192,32 +180,21 @@ object PipelineQueries {
         .as("stale"))
       .filter(col("stale") === 1)
     val langs = Seq("en", "de", "es", "fr", "zh")
-    if (!s.conf.get("spark.graft.dq.fuse", "true").toBoolean)
-      summarize(Seq(
-        Check("docs_lang_accepted", acceptedValues(docs, "lang", langs)),
-        Check("docs_meta_reconciled",
-          docs.filter(col("n_chars") =!= length(col("text")))),
-        Check("docs_text_nonempty",
-          docs.filter(col("text").isNull || length(col("text")) === 0)),
-        Check("emb_dim_contract", emb.filter(size(col("embedding")) =!= 64)),
-        Check("events_fresh_by_cutoff", fresh)))
-    else {
-      // fused (guide §6): the three documents checks share ONE scan via
-      // a conditional aggregate (was 3 full passes over the text column)
-      val docChecks = summarizeConditions(docs, Seq(
-        "docs_lang_accepted" ->
-          (!col("lang").isin(langs: _*) || col("lang").isNull),
-        "docs_meta_reconciled" -> (col("n_chars") =!= length(col("text"))),
-        "docs_text_nonempty" ->
-          (col("text").isNull || length(col("text")) === 0)))
-      val embCheck = summarizeConditions(emb,
-        Seq("emb_dim_contract" -> (size(col("embedding")) =!= 64)))
-      val freshCheck = fresh
-        .agg(count(lit(1)).cast("bigint").as("violations"))
-        .select(lit("events_fresh_by_cutoff").as("check_name"),
-          col("violations"))
-      docChecks.unionAll(embCheck).unionAll(freshCheck).orderBy("check_name")
-    }
+    // fused (guide §6): the three documents checks share ONE scan via
+    // a conditional aggregate (was 3 full passes over the text column)
+    val docChecks = summarizeConditions(docs, Seq(
+      "docs_lang_accepted" ->
+        (!col("lang").isin(langs: _*) || col("lang").isNull),
+      "docs_meta_reconciled" -> (col("n_chars") =!= length(col("text"))),
+      "docs_text_nonempty" ->
+        (col("text").isNull || length(col("text")) === 0)))
+    val embCheck = summarizeConditions(emb,
+      Seq("emb_dim_contract" -> (size(col("embedding")) =!= 64)))
+    val freshCheck = fresh
+      .agg(count(lit(1)).cast("bigint").as("violations"))
+      .select(lit("events_fresh_by_cutoff").as("check_name"),
+        col("violations"))
+    docChecks.unionAll(embCheck).unionAll(freshCheck).orderBy("check_name")
   }
 
   // ---------------------------------------------------------------- dq03

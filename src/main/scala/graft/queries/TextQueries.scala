@@ -22,13 +22,10 @@ object TextQueries {
     * shuffle — so an un-persisted expensive projection (regex
     * tokenization, PII scans) runs TWICE over the corpus. The persisted
     * frame is the NARROW per-doc result (a few scalars per row), so the
-    * cache is corpus-row-count sized, not corpus-byte sized. Conf-gated
-    * for A/B. */
+    * cache is corpus-row-count sized, not corpus-byte sized. */
   private def sortShared(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    if (df.sparkSession.conf
-        .get("spark.graft.tsort.persist", "true").toBoolean)
-      graft.CacheScope.persist(df) else df
+    graft.CacheScope.persist(df)
 
   // ---------------------------------------------------------------- t01
   // Token counting + basic stats per document.
@@ -216,12 +213,10 @@ object TextQueries {
     // widened ahead of the rolling-hash pass (the d09 rationale: the
     // polynomial hash over every char is the heaviest per-row stage and
     // the scan is unsplittable; Par.wide no-ops at realistic layouts)
-    val src = if (s.conf.get("spark.graft.t07.wide", "true").toBoolean)
-      graft.operators.Par.wide(docs(s, d)) else docs(s, d)
     // persisted: both self-join legs read the fingerprints — without
     // this the rolling-hash pass over every document runs twice
     val fps = graft.CacheScope.persist(
-      src.select(col("doc_id"),
+      graft.operators.Par.wide(docs(s, d)).select(col("doc_id"),
         explode(rolling_fingerprint(col("text"))).as("fp")))
     val a = fps.select(col("doc_id").as("i"), col("fp"))
     val b = fps.select(col("doc_id").as("j"), col("fp"))
@@ -346,13 +341,9 @@ object TextQueries {
     // (per-row heavy, unsplittable scan; no-op at realistic layouts) and
     // persist the exploded rows — the df aggregate AND the join-back leg
     // both read them, so without the persist the shingle pass runs twice
-    val t10src = if (s.conf.get("spark.graft.t10.opt", "true").toBoolean)
-      graft.operators.Par.wide(docs(s, d)) else docs(s, d)
-    val ex0 = graft.operators.Dedup
-      .shingleSets(t10src, "doc_id", "text")
-      .select(col("doc_id"), explode(col("sh")).as("s"))
-    val ex = if (s.conf.get("spark.graft.t10.opt", "true").toBoolean)
-      graft.CacheScope.persist(ex0) else ex0
+    val ex = graft.CacheScope.persist(graft.operators.Dedup
+      .shingleSets(graft.operators.Par.wide(docs(s, d)), "doc_id", "text")
+      .select(col("doc_id"), explode(col("sh")).as("s")))
     val df = ex.groupBy("s").agg(count(lit(1)).as("df"))
     ex.join(df, "s")
       .groupBy("doc_id")
@@ -523,11 +514,9 @@ object TextQueries {
     // twice. NOT widened: Par.wide ahead of the explode A/B'd 1.33×
     // slower (r15) — the token explode is too cheap per row to pay for
     // the exchange (unlike the shingle/rolling-hash sites).
-    val t14opt = s.conf.get("spark.graft.t14.opt", "true").toBoolean
-    val tf0 = docs(s, d)
+    val tf = graft.CacheScope.persist(docs(s, d)
       .select(explode(tokens(col("text"))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("cnt"))
-    val tf = if (t14opt) graft.CacheScope.persist(tf0) else tf0
+      .groupBy("term").agg(count(lit(1)).as("cnt")))
     val ranked = graft.operators.ScalableWindow.globalRank(
       tf, expr("-cnt"), Seq(col("cnt").desc, col("term")), "rnk")
     val lnR = log(col("rnk"))

@@ -851,7 +851,6 @@ object VectorQueries {
        |SELECT query_id, id, rrf, lex_rank, vec_rank, rank
        |FROM final_ranked WHERE rank <= 10
        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    import graft.functions.expressions.TopKPairs.topk_pairs
     val emb = t(s, d, "embeddings")
     val lex = TextQueries.bm25TopK(s, t(s, d, "documents"), 20)
       .select(col("query_id"), col("doc_id").as("id"),
@@ -860,7 +859,7 @@ object VectorQueries {
       .bruteForceTopK(emb, emb.filter(col("vec_id") < 3), 20)
       .select(col("query_id"), col("neighbor_id").as("id"),
         col("rank").cast("long").as("vec_rank"))
-    val fused0 = lex.join(vec, Seq("query_id", "id"), "full_outer")
+    val fused = lex.join(vec, Seq("query_id", "id"), "full_outer")
       .select(col("query_id"), col("id"),
         coalesce(col("lex_rank"), lit(0L)).as("lex_rank"),
         coalesce(col("vec_rank"), lit(0L)).as("vec_rank"),
@@ -869,38 +868,23 @@ object VectorQueries {
             .otherwise(lit(1.0) / (lit(60) + col("lex_rank"))) +
           when(col("vec_rank").isNull, lit(0.0))
             .otherwise(lit(1.0) / (lit(60) + col("vec_rank"))), 6).as("rrf"))
-    if (s.conf.get("spark.graft.v13.window", "true").toBoolean) {
-      // single-consumer finisher (r15): `fused0` is BOUNDED by
-      // construction — both legs are top-20 cuts, so ≤ 40 rows per query
-      // regardless of corpus size — which makes a query-partitioned
-      // row_number window scale-safe here (the topk_pairs discipline
-      // exists for corpus-sized candidate sets; this isn't one). The
-      // previous topk+join-back consumed the persisted fused frame from
-      // two INDEPENDENT stages of one job, which materialized the whole
-      // two-leg lineage twice concurrently (profiled Σ task 8.6 s vs
-      // ~1.3 s for the legs run alone); one window pass consumes it once
-      // and needs no persist at all.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("rrf").desc, col("id"))
-      fused0.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-        .select("query_id", "id", "rrf", "lex_rank", "vec_rank", "rank")
-        .orderBy("query_id", "rank")
-    } else {
-      // persisted (scope-aware): feeds BOTH the top-k cut and the rank
-      // join-back — without it each consumer re-runs both retrieval legs
-      val fused = graft.CacheScope.persist(fused0)
-      fused.groupBy("query_id")
-        .agg(topk_pairs(col("rrf"), col("id"), 10).as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        .select(col("query_id"), col("col.id").as("id"),
-          col("col.score").as("rrf"), (col("pos") + 1).as("rank"))
-        .join(fused.select("query_id", "id", "lex_rank", "vec_rank"),
-          Seq("query_id", "id"))
-        .select("query_id", "id", "rrf", "lex_rank", "vec_rank", "rank")
-        .orderBy("query_id", "rank")
-    }
+    // single-consumer finisher (r15): `fused` is BOUNDED by
+    // construction — both legs are top-20 cuts, so ≤ 40 rows per query
+    // regardless of corpus size — which makes a query-partitioned
+    // row_number window scale-safe here (the topk_pairs discipline
+    // exists for corpus-sized candidate sets; this isn't one). The
+    // previous topk+join-back consumed a persisted fused frame from
+    // two INDEPENDENT stages of one job, which materialized the whole
+    // two-leg lineage twice concurrently (profiled Σ task 8.6 s vs
+    // ~1.3 s for the legs run alone; r15 AB 0.848); one window pass
+    // consumes it once and needs no persist at all.
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("rrf").desc, col("id"))
+    fused.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 10)
+      .select("query_id", "id", "rrf", "lex_rank", "vec_rank", "rank")
+      .orderBy("query_id", "rank")
   }
 
   // ---------------------------------------------------------------- c03

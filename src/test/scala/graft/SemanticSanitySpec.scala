@@ -37,6 +37,21 @@ class SemanticSanitySpec extends SparkSpec {
     assert(math.abs(total - 100.0) < 0.1)
   }
 
+  test("q10: an exact half-cent share rounds half-up (20.275 % -> 20.28)") {
+    // 4,055 of 20,000 events is exactly 20.275 %, 15,945 is 79.725 %;
+    // exact half-up gives 20.28 and 79.73 (a rounded DOUBLE quotient
+    // gives 20.27 and 79.72, since 20.275 is 20.27499… as a double)
+    val dir = java.nio.file.Files.createTempDirectory("graft-q10-tie").toString
+    spark.range(20000)
+      .select(when(col("id") < 4055, "click").otherwise("view").as("event_type"),
+        lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
+      .write.parquet(s"$dir/events.parquet")
+    val got = CoreQueries.q10PctOfTotal.fn(spark, dir)
+      .select("event_type", "n", "pct").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(got === Seq(("click", 4055L, 20.28), ("view", 15945L, 79.73)))
+  }
+
   test("p03: value shares sum to 100 (±rounding)") {
     val total = PipelineQueries.p03UserStats.fn(spark, sfDir)
       .agg(sum("value_share_pct")).head().getDouble(0)
