@@ -22,10 +22,6 @@ object DataQuality {
     child.filter(col(childKey).isNotNull)
       .join(parent, col(childKey) === col(parentKey), "left_anti")
 
-  /** Contract check: schema equality by (name, dataType) in order. */
-  def schemaMatches(df: DataFrame, expected: Seq[(String, String)]): Boolean =
-    df.schema.fields.map(f => (f.name, f.dataType.simpleString)).toSeq == expected
-
   /** Roll a suite into one summary frame, ordered by check name. */
   def summarize(checks: Seq[Check]): DataFrame = {
     val counted = checks.map { c =>

@@ -109,7 +109,7 @@ object JoinMv {
     * allowing ONLY row-identical compactions in the window (its
     * file-diff keeps tracking the repacked live set, so an OPTIMIZE on
     * a source never breaks the MV); any row-CHANGING commit
-    * (overwrite, merge, delete, mor-delete) still throws rather than
+    * (overwrite, merge, delete, dv-delete) still throws rather than
     * silently corrupting the MV — that's [[refreshCdc]]'s job. */
   private def appendsOnly(spark: SparkSession, root: String,
       from: Long, to: Long): DataFrame =

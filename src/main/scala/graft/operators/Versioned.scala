@@ -108,10 +108,6 @@ object Versioned {
       // row-level change files (Delta CDF): written by merge/delete when
       // cdf=true, read by changeFeed; relative paths like data files
       cdf: Seq[String] = Nil,
-      // merge-on-read deletes still pending materialization: each entry
-      // is a predicate plus the EXACT files it applies to (the live set
-      // at delete time), so later appends are never retro-deleted
-      mor: Seq[MorDelete] = Nil,
       // hive-layout partition columns: every data file holds exactly one
       // partition tuple, recorded as min==max stats for these columns —
       // partition pruning IS stats pruning, and [[overwritePartitions]]
@@ -184,8 +180,6 @@ object Versioned {
       // column no longer appears in any live file's stats (compaction
       // migrates the table to one spec without knowing spec history).
       legacyTransforms: Seq[PartTransform] = Nil)
-
-  private case class MorDelete(pred: String, files: Seq[String])
 
   /** One HIDDEN partition transform (Iceberg's hidden partitioning):
     * the table is partitioned by `fn(src)` without the user carrying a
@@ -467,7 +461,7 @@ object Versioned {
       val base =
         if (mode == "append") currentFiles(root, latest) else Seq.empty
       publishEntries(root, base ++ entries, latest.getOrElse(0L),
-        action = mode, txn, schema, mor = carriedMor(root, latest, mode),
+        action = mode, txn, schema,
         partitionBy = Some(partCols), props = props,
         dvs = carriedDvs(root, latest, mode),
         dropped = if (mode == "overwrite") Some(Map.empty) else None,
@@ -537,7 +531,7 @@ object Versioned {
       s"tag '$name' already exists on $root (at v${tags(name)}) — " +
         "DROP TAG first to re-point it")
     publishEntries(root, m.files, latest, "tag",
-      schemaJson = m.schemaJson.orNull, mor = m.mor, dvs = m.dvs,
+      schemaJson = m.schemaJson.orNull, dvs = m.dvs,
       props = Map(TagsKey -> renderTags(tags + (name -> target))))
   }
 
@@ -553,7 +547,7 @@ object Versioned {
         (if (tags.isEmpty) "" else s" — tags: ${tags.keys.toSeq.sorted
           .mkString(", ")}"))
     publishEntries(root, m.files, latest, "tag",
-      schemaJson = m.schemaJson.orNull, mor = m.mor, dvs = m.dvs,
+      schemaJson = m.schemaJson.orNull, dvs = m.dvs,
       props = Map(TagsKey -> renderTags(tags - name)))
   }
 
@@ -782,7 +776,7 @@ object Versioned {
     // subset refreshes just that subset)
     val merged = colStatsOf(root, latest) ++ freshH
     publishEntries(root, m.files, latest, "analyze",
-      schemaJson = m.schemaJson.orNull, mor = m.mor, dvs = m.dvs,
+      schemaJson = m.schemaJson.orNull, dvs = m.dvs,
       props = Map(ColStatsKey -> renderColStats(merged)))
   }
 
@@ -1385,7 +1379,7 @@ object Versioned {
         if (mode == "append") currentFiles(root, parent) else Seq.empty
       try {
         publishEntries(root, base ++ entries, parent.getOrElse(0L), mode,
-          Some((appId, batchId)), schema, mor = carriedMor(root, parent, mode),
+          Some((appId, batchId)), schema,
           partitionBy = Some(partCols), dvs = carriedDvs(root, parent, mode),
           dropped = if (mode == "overwrite") Some(Map.empty) else None,
           physNames = if (mode == "overwrite") Some(Map.empty) else None)
@@ -1482,7 +1476,6 @@ object Versioned {
       try {
         publishEntries(root, base ++ entries, parent.getOrElse(0L), mode,
           Some((appId, batchId)), schema,
-          mor = carriedMor(root, parent, mode),
           partitionBy = Some(partCols),
           dvs = carriedDvs(root, parent, mode),
           dropped = if (mode == "overwrite") Some(Map.empty) else None,
@@ -1518,7 +1511,7 @@ object Versioned {
         partitionBy = Some(Nil), dropped = Some(Map.empty),
         physNames = Some(Map.empty))
     else {
-      require(m.mor.isEmpty && m.dvs.isEmpty, s"table at $root has " +
+      require(m.dvs.isEmpty, s"table at $root has " +
         "pending merge-on-read state; compact to materialize it before " +
         "a partition overwrite (its by-reference file carry would " +
         "resurrect deleted rows)")
@@ -1575,7 +1568,7 @@ object Versioned {
     if (scanned.isEmpty && entries.isEmpty) return latest
     val m = readManifest(root, latest)
     checkPlanned(root, Some(m), planned)
-    require(m.mor.isEmpty && m.dvs.isEmpty, s"table at $root has " +
+    require(m.dvs.isEmpty, s"table at $root has " +
       "pending merge-on-read state; compact to materialize it before a " +
       "copy-on-write row-level operation (its by-reference file carry " +
       "would resurrect deleted rows)")
@@ -1599,10 +1592,9 @@ object Versioned {
     * table, the Iceberg position-delta / Delta deletion-vector
     * economics. Pinned-version CAS, unretried, like
     * [[publishStagedReplace]]: the delta was computed from the pinned
-    * snapshot. Pending PREDICATE merge-on-read deletes refuse (one
-    * row-removal algebra at a time); pending deletion vectors MERGE
-    * (the scan that produced this delta anti-filtered them, so the
-    * union stays exact). The change feed replays the commit lazily
+    * snapshot. Pending deletion vectors MERGE (the scan that produced
+    * this delta anti-filtered them, so the union stays exact). The
+    * change feed replays the commit lazily
     * from the manifest — fresh positions as delete envelopes, new
     * files as inserts — no change files needed. */
   private[graft] def publishStagedDelta(root: String,
@@ -1622,10 +1614,6 @@ object Versioned {
       return latest // no-match no-op: publish nothing
     val m = readManifest(root, latest)
     checkPlanned(root, Some(m), planned)
-    require(m.mor.isEmpty, s"table at $root has ${m.mor.size} pending " +
-      "predicate merge-on-read delete(s); compact to materialize them " +
-      "before positional delta operations (one pending row-removal " +
-      "algebra at a time)")
     // protocol: `deletes` lists EVERY touched file (an empty position
     // list marks a file whose positions all went to sidecars), and
     // each sidecar names the exact files it covers — a covered file
@@ -1697,17 +1685,9 @@ object Versioned {
   private def currentFiles(root: String, v: Option[Long]): Seq[FileEntry] =
     v.map(ver => readManifest(root, ver).files).getOrElse(Seq.empty)
 
-  // appends CARRY pending merge-on-read deletes forward (they apply to
-  // the files they were recorded against, never the new ones);
-  // overwrite/compact replace the live set, so pending deletes die
-  private def carriedMor(root: String, parent: Option[Long],
-      mode: String): Seq[MorDelete] =
-    if (mode != "append") Nil
-    else parent.map(readManifest(root, _).mor).getOrElse(Nil)
-
-  // deletion vectors ride with their files exactly like mor predicates:
-  // appends carry them (they index EXISTING files' rows; new files have
-  // none), overwrite/compact replace the live set and clear them
+  // deletion vectors ride with their files: appends carry them (they
+  // index EXISTING files' rows; new files have none), overwrite/compact
+  // replace the live set and clear them
   private def carriedDvs(root: String, parent: Option[Long],
       mode: String): Seq[DvEntry] =
     if (mode != "append") Nil
@@ -1762,7 +1742,7 @@ object Versioned {
   /** Time travel: the exact file set published as version `v`, under
     * version `v`'s OWN schema (evolution is versioned too: a snapshot
     * from before a column existed doesn't have it), minus any pending
-    * merge-on-read deletes recorded as of `v`. */
+    * deletion vectors recorded as of `v`. */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
     val m = readManifest(root, v)
     if (m.files.isEmpty) emptyLike(spark, root)
@@ -1770,40 +1750,28 @@ object Versioned {
   }
 
   /** Read `relPaths` of manifest `m`, aligned to its schema, with each
-    * file anti-filtered by exactly the pending merge-on-read predicates
-    * that apply to IT (files are grouped by applicable predicate set,
-    * so an appended-after-delete file is never retro-deleted and the
-    * union stays a few-way plan, not per-file). */
+    * file's pending deletion-vector positions anti-joined away. */
   private def readLive(spark: SparkSession, root: String, m: Manifest,
       relPaths: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
+    // deletion-vector'd files read row positions and anti-join their
+    // deleted set; clean files take the plain vectorized path
     val dvFiles = m.dvs.map(_.file).toSet
-    val predFiles = m.mor.map(d => (d.pred, d.files.toSet))
-    val groups = relPaths.groupBy(p =>
-      predFiles.collect { case (pred, fs) if fs(p) => pred })
-    groups.map { case (preds, paths) =>
-      // deletion-vector'd files read row positions and anti-join their
-      // deleted set; clean files take the plain vectorized path
-      val (dvd, clean) = paths.partition(dvFiles)
-      val pieces = Seq.newBuilder[DataFrame]
-      if (clean.nonEmpty)
-        pieces += readAligned(spark,
-          clean.map(p => resolve(root, p).getPath), m.schemaJson, m.physNames)
-      if (dvd.nonEmpty) {
-        // ONE scan of all vectored files + ONE distributed anti-join
-        // keyed on (file, position) — never a per-file plan branch or
-        // a positions IN-literal, so a thousand-file wide delete reads
-        // as a single hash join, not a thousand-way union
-        val raw = readWithPositions(spark, root, dvd, m.schemaJson, m.physNames)
-        pieces += raw.join(dvPositions(spark, root, m.dvs),
-            Seq("__vfile", "__vpos"), "left_anti")
-          .drop("__vfile", "__vpos")
-      }
-      val df = pieces.result().reduce(_ unionByName _)
-      // SQL DELETE semantics per predicate: remove cond=true, KEEP null
-      preds.foldLeft(df)((d, p) =>
-        d.filter(not(coalesce(expr(p), lit(false)))))
-    }.reduce(_ unionByName _)
+    val (dvd, clean) = relPaths.partition(dvFiles)
+    val pieces = Seq.newBuilder[DataFrame]
+    if (clean.nonEmpty)
+      pieces += readAligned(spark,
+        clean.map(p => resolve(root, p).getPath), m.schemaJson, m.physNames)
+    if (dvd.nonEmpty) {
+      // ONE scan of all vectored files + ONE distributed anti-join
+      // keyed on (file, position) — never a per-file plan branch or
+      // a positions IN-literal, so a thousand-file wide delete reads
+      // as a single hash join, not a thousand-way union
+      val raw = readWithPositions(spark, root, dvd, m.schemaJson, m.physNames)
+      pieces += raw.join(dvPositions(spark, root, m.dvs),
+          Seq("__vfile", "__vpos"), "left_anti")
+        .drop("__vfile", "__vpos")
+    }
+    pieces.result().reduce(_ unionByName _)
   }
 
   /** Read manifest-relative `relPaths` aligned to the table schema,
@@ -2533,10 +2501,6 @@ object Versioned {
         s"table at $root is at version $latest, expected $ev")
     }
     val m = readManifest(root, latest)
-    require(m.mor.isEmpty, s"table at $root has ${m.mor.size} pending " +
-      "merge-on-read delete(s); compact to materialize them before a " +
-      "copy-on-write delete (its by-reference file carry would resurrect " +
-      "deleted rows)")
     require(m.dvs.isEmpty, s"table at $root has pending deletion " +
       "vector(s); compact to materialize them before a copy-on-write " +
       "delete (its by-reference file carry would resurrect deleted rows)")
@@ -2660,26 +2624,12 @@ object Versioned {
       version: Long): Seq[DvEntry] = readManifest(root, version).dvs
 
   /** Metadata-only aggregate inputs at `version`: the live file
-    * entries (resolved across segments), the column mapping (file
-    * stats are keyed PHYSICAL), and whether pending merge-on-read
-    * state (predicate deletes / deletion vectors) makes per-file row
-    * counts and bounds untrustworthy — aggregate pushdown must refuse
-    * there, the anti-filtered scan path answers instead. */
+    * entries (resolved across segments) and the column mapping (file
+    * stats are keyed PHYSICAL). */
   private[graft] def aggMeta(root: String, version: Long)
-      : (Seq[FileEntry], Map[String, String], Boolean) = {
+      : (Seq[FileEntry], Map[String, String]) = {
     val m = readManifest(root, version)
-    (m.files, m.physNames, m.mor.nonEmpty || m.dvs.nonEmpty)
-  }
-
-  /** Pending row-removal state at `version`, SPLIT by algebra:
-    * (predicate merge-on-read deletes, positional deletion vectors).
-    * Predicate deletes poison every per-file fact (nothing is provable
-    * without re-evaluating them); deletion vectors are EXACT — their
-    * cardinality is knowable, so COUNT(*) stays metadata-answerable. */
-  private[graft] def pendingSplit(root: String,
-      version: Long): (Boolean, Boolean) = {
-    val m = readManifest(root, version)
-    (m.mor.nonEmpty, m.dvs.nonEmpty)
+    (m.files, m.physNames)
   }
 
   /** Deleted positions per file at `version` from MANIFEST ARITHMETIC
@@ -2718,21 +2668,6 @@ object Versioned {
       .toMap
   }
 
-  /** Whether `version` carries pending PREDICATE merge-on-read deletes
-    * (the non-positional algebra) — no native scan can serve those;
-    * compact first. */
-  private[graft] def pendingPredMor(root: String, version: Long): Boolean =
-    readManifest(root, version).mor.nonEmpty
-
-  /** Every predicate text any RETAINED manifest's merge-on-read
-    * entries carry — the native feed binds these driver-side so tasks
-    * can replay mor-delete commits without an analyzer. Bounded by the
-    * table's total pending-predicate history, typically zero or a
-    * handful. */
-  private[graft] def pendingMorPredicates(root: String): Seq[String] =
-    versions(root).flatMap(v => readManifest(root, v).mor.map(_.pred))
-      .distinct
-
   /** The table's declared hive-layout partition columns at `version`
     * (latest when `None`); empty for an unpartitioned table. Manifest
     * metadata only — SQL INSERT OVERWRITE reads this to preserve the
@@ -2758,7 +2693,7 @@ object Versioned {
 
   /** Read a pruned subset of `version`'s live files (relative paths from
     * [[candidateFilesForBounds]]) under the version's aligned schema,
-    * pending merge-on-read deletes applied; an empty subset still
+    * pending deletion vectors applied; an empty subset still
     * yields the right (empty) shape. */
   def readVersionFiles(spark: SparkSession, root: String, version: Long,
       relPaths: Seq[String]): DataFrame =
@@ -2832,10 +2767,6 @@ object Versioned {
         s"table at $root is at version $latest, expected $ev")
     }
     val m = readManifest(root, latest)
-    require(m.mor.isEmpty, s"table at $root has ${m.mor.size} pending " +
-      "merge-on-read delete(s); compact to materialize them before a " +
-      "copy-on-write merge (its by-reference file carry would resurrect " +
-      "deleted rows)")
     require(m.dvs.isEmpty, s"table at $root has pending deletion " +
       "vector(s); compact to materialize them before a copy-on-write " +
       "merge (its by-reference file carry would resurrect deleted rows)")
@@ -2987,7 +2918,7 @@ object Versioned {
         s"table at $root is at version $latest, expected $ev")
     }
     val m = readManifest(root, latest)
-    require(m.mor.isEmpty && m.dvs.isEmpty, s"table at $root has pending " +
+    require(m.dvs.isEmpty, s"table at $root has pending " +
       "merge-on-read state; compact to materialize it before a " +
       "copy-on-write merge (its by-reference file carry would resurrect " +
       "deleted rows)")
@@ -3270,10 +3201,6 @@ object Versioned {
       require(m.partitionBy.nonEmpty, s"table at $root is not " +
         "partitioned — overwritePartitions needs a partitionBy'd table " +
         "(use commit(mode=\"overwrite\") for a full overwrite)")
-      require(m.mor.isEmpty, s"table at $root has ${m.mor.size} pending " +
-        "merge-on-read delete(s); compact to materialize them before a " +
-        "partition overwrite (its by-reference file carry would " +
-        "resurrect deleted rows)")
       require(m.dvs.isEmpty, s"table at $root has pending deletion " +
         "vector(s); compact to materialize them before a partition " +
         "overwrite")
@@ -3360,10 +3287,6 @@ object Versioned {
         s"table at $root is at version $latest, expected $ev")
     }
     val m = readManifest(root, latest)
-    require(m.mor.isEmpty, s"table at $root has ${m.mor.size} pending " +
-      "merge-on-read delete(s); compact to materialize them before a " +
-      "copy-on-write delete (its by-reference file carry would resurrect " +
-      "deleted rows)")
     require(m.dvs.isEmpty, s"table at $root has pending deletion " +
       "vector(s); compact to materialize them before a copy-on-write " +
       "delete (its by-reference file carry would resurrect deleted rows)")
@@ -3426,10 +3349,6 @@ object Versioned {
         s"table at $root is at version $latest, expected $ev")
     }
     val m = readManifest(root, latest)
-    require(m.mor.isEmpty, s"table at $root has ${m.mor.size} pending " +
-      "merge-on-read delete(s); compact to materialize them before a " +
-      "copy-on-write update (its by-reference file carry would resurrect " +
-      "deleted rows)")
     require(m.dvs.isEmpty, s"table at $root has pending deletion " +
       "vector(s); compact to materialize them before a copy-on-write " +
       "update (its by-reference file carry would resurrect deleted rows)")
@@ -3525,7 +3444,7 @@ object Versioned {
         s"table at $root is at version $latest, expected $ev")
     }
     val m = readManifest(root, latest)
-    require(m.mor.isEmpty && m.dvs.isEmpty, s"table at $root has pending " +
+    require(m.dvs.isEmpty, s"table at $root has pending " +
       "merge-on-read state; compact to materialize it before replaceWhere " +
       "(its by-reference file carry would resurrect deleted rows)")
     val schema = evolvedSchema(root, df, "append", mergeSchema = false)
@@ -3588,7 +3507,7 @@ object Versioned {
     require(bad == 0L, s"cannot add CHECK constraint '$name' ($cond): " +
       s"$bad existing row(s) violate it")
     publishEntries(root, m.files, latest, "constraint",
-      schemaJson = m.schemaJson.orNull, mor = m.mor, dvs = m.dvs,
+      schemaJson = m.schemaJson.orNull, dvs = m.dvs,
       carryFrom = Some(latest),
       constraints = Some(m.constraints + (name -> cond)))
   }
@@ -3623,15 +3542,15 @@ object Versioned {
       val extended = org.apache.spark.sql.types.StructType(
         schema.fields ++ cols)
       publishEntries(root, m.files, latest, "schema",
-        schemaJson = extended.json, mor = m.mor, dvs = m.dvs,
+        schemaJson = extended.json, dvs = m.dvs,
         carryFrom = Some(latest),
         constraints = Some(m.constraints), dropped = Some(cleared))
     }
 
-  /** A predicate the manifest must keep evaluating (CHECK constraint,
-    * pending merge-on-read delete) that references a dropped or renamed
-    * column would break every future read/write: reject, pointing at
-    * the verb that removes the obligation. `cols` are lowercased. */
+  /** A CHECK constraint the manifest must keep evaluating that
+    * references a dropped or renamed column would break every future
+    * write: reject, pointing at the verb that removes the obligation.
+    * `cols` are lowercased. */
   private def requirePredsFree(spark: SparkSession, m: Manifest,
       cols: Set[String]): Unit = {
     def refs(pred: String): Set[String] =
@@ -3644,12 +3563,6 @@ object Versioned {
       require(hit.isEmpty,
         s"CHECK constraint '$cn' references ${hit.mkString(", ")} — " +
           "drop the constraint first")
-    }
-    m.mor.foreach { d =>
-      val hit = refs(d.pred).intersect(cols)
-      require(hit.isEmpty,
-        s"pending merge-on-read delete '${d.pred}' references " +
-          s"${hit.mkString(", ")} — compact the table first")
     }
   }
 
@@ -3666,9 +3579,9 @@ object Versioned {
     * the mapping (canonicalization).
     *
     * Rejected loudly (same reasons as [[dropColumns]]): partition
-    * columns, and columns referenced by a CHECK constraint or a
-    * pending merge-on-read predicate — each names the column by its
-    * logical text and would silently stop resolving. */
+    * columns, and columns referenced by a CHECK constraint — it names
+    * the column by its logical text and would silently stop
+    * resolving. */
   def renameColumn(spark: SparkSession, root: String, from: String,
       to: String): Long = withOccRetry(None) {
     val latest = latestVersion(root).getOrElse(
@@ -3712,7 +3625,7 @@ object Versioned {
     }.map(cs => Map(ColStatsKey -> renderColStats(cs)))
       .getOrElse(Map.empty[String, String])
     publishEntries(root, m.files, latest, "schema",
-      schemaJson = renamed.json, mor = m.mor, dvs = m.dvs,
+      schemaJson = renamed.json, dvs = m.dvs,
       carryFrom = Some(latest), constraints = Some(m.constraints),
       physNames = Some(newMap), transforms = Some(newTx),
       legacyTransforms = Some(newLegacy),
@@ -3789,7 +3702,7 @@ object Versioned {
     val widened = org.apache.spark.sql.types.StructType(schema.fields.map(
       f => if (f.name == field.name) f.copy(dataType = to) else f))
     publishEntries(root, m.files, latest, "schema",
-      schemaJson = widened.json, mor = m.mor, dvs = m.dvs,
+      schemaJson = widened.json, dvs = m.dvs,
       carryFrom = Some(latest), constraints = Some(m.constraints),
       legacyTransforms = Some(legacyKept))
   }
@@ -3851,10 +3764,9 @@ object Versioned {
     * the last pre-drop file is retired.
     *
     * Rejected loudly: partition columns (the layout is derived from
-    * them), columns referenced by a CHECK constraint (drop the
-    * constraint first), and columns referenced by a pending
-    * merge-on-read delete predicate (compact first) — each would make
-    * an existing manifest obligation unevaluable. */
+    * them), and columns referenced by a CHECK constraint (drop the
+    * constraint first) — it would make an existing manifest
+    * obligation unevaluable. */
   def dropColumns(spark: SparkSession, root: String,
       names: Seq[String]): Long = withOccRetry(None) {
     require(names.nonEmpty, "dropColumns needs at least one column")
@@ -3894,7 +3806,7 @@ object Versioned {
       .map(cs => Map(ColStatsKey -> renderColStats(cs -- dropSet)))
       .getOrElse(Map.empty[String, String])
     publishEntries(root, m.files, latest, "schema",
-      schemaJson = narrowed.json, mor = m.mor, dvs = m.dvs,
+      schemaJson = narrowed.json, dvs = m.dvs,
       carryFrom = Some(latest),
       constraints = Some(m.constraints),
       // the hazard set is the live set at THIS commit's parent — the
@@ -3916,71 +3828,18 @@ object Versioned {
     require(m.constraints.contains(name),
       s"no constraint '$name' on $root (have: ${m.constraints.keys.mkString(", ")})")
     publishEntries(root, m.files, latest, "constraint",
-      schemaJson = m.schemaJson.orNull, mor = m.mor, dvs = m.dvs,
+      schemaJson = m.schemaJson.orNull, dvs = m.dvs,
       carryFrom = Some(latest),
       constraints = Some(m.constraints - name))
   }
 
-  /** Merge-on-read DELETE: record the predicate in the manifest instead
-    * of rewriting any data — the deletion-vector economics in predicate
-    * form. The commit is O(manifest): no data file is read, written, or
-    * moved, at ANY table size (a copy-on-write delete is O(matching
-    * files) of read+write; at 100 TB that difference is the whole
-    * point). Readers anti-filter exactly the files the predicate may
-    * touch — scoped HERE at commit time from manifest stats, so a
-    * pending delete adds zero cost to reads of files it provably
-    * can't affect, and later appends are never retro-deleted.
-    *
-    * Pending deletes survive appends, streaming-sink commits, restore,
-    * and time travel; `compact` (or any overwrite) materializes and
-    * clears them. Copy-on-write [[mergeUpsert]]/[[delete]] refuse while
-    * deletes are pending — compact first. [[changeFeed]] replays a
-    * pending delete's row envelopes LAZILY from the immutable files it
-    * applies to (deterministic, no change files needed).
-    *
-    * The predicate must round-trip as SQL text (validated against the
-    * table schema here, so a typo fails at delete time, not read time).
-    *
-    * @return the new version, or the current one when manifest stats
-    *         prove no file could match (a provable no-op)
-    */
-  def deleteDeferred(spark: SparkSession, root: String, cond: Column,
-      expectedVersion: Option[Long] = None): Long =
-    withOccRetry(expectedVersion) {
-    import org.apache.spark.sql.functions.expr
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root to delete from"))
-    expectedVersion.foreach { ev =>
-      if (ev != latest) throw new VersionConflictException(
-        s"table at $root is at version $latest, expected $ev")
-    }
-    val m = readManifest(root, latest)
-    require(m.dvs.isEmpty, s"table at $root has pending deletion " +
-      "vector(s); one pending row-removal algebra at a time — compact " +
-      "before predicate merge-on-read deletes")
-    // analyzer-resolved against the table schema (fails fast on unknown
-    // columns); the RESOLVED expression's .sql is the text that
-    // round-trips through expr() at read time
-    val condExpr = resolvedPredicate(spark, root, cond)
-    val predSql = condExpr.sql
-    readVersion(spark, root, latest).limit(0).filter(expr(predSql))
-      .queryExecution.analyzed // prove the round-trip parses, at delete time
-    val statsExpr = physForStats(condExpr, m.physNames)
-    val touched = m.files.filter(f => mayMatch(f, statsExpr)).map(_.path)
-    if (touched.isEmpty) latest
-    else publishEntries(root, m.files, latest, "mor-delete",
-      schemaJson = m.schemaJson.orNull,
-      mor = m.mor :+ MorDelete(predSql, touched), dvs = m.dvs)
-  }
-
-  /** POSITIONAL merge-on-read delete — the Delta/Iceberg
-    * deletion-vector mechanism: evaluate `cond` ONCE at delete time,
-    * record the matching (file, row_index) positions in the manifest,
-    * touch no data file. Compared to [[deleteDeferred]] (predicate
-    * form): reads pay an integer anti-join instead of re-evaluating
-    * the predicate per row forever, the deleted set is FROZEN at
-    * delete time (a later row that would now match the predicate is
-    * unaffected — exact row semantics), and conditions that aren't
+  /** Merge-on-read DELETE — the Delta/Iceberg deletion-vector
+    * mechanism: evaluate `cond` ONCE at delete time, record the
+    * matching (file, row_index) positions in the manifest, touch no
+    * data file. Reads pay an integer anti-join, never a per-row
+    * predicate re-evaluation; the deleted set is FROZEN at delete time
+    * (a later row that would now match the predicate is unaffected —
+    * exact row semantics), and conditions that aren't
     * SQL-round-trippable (e.g. derived from a driver-side sample)
     * work, because only their RESULT is stored.
     *
@@ -4001,9 +3860,7 @@ object Versioned {
     * the manifest, scoped to their immutable files); `compact`/
     * `optimize`/`zorder`/overwrite materialize and clear them.
     * Copy-on-write merge/delete refuse while vectors are pending (the
-    * by-reference carry would resurrect rows); predicate-MoR and
-    * positional-MoR are mutually exclusive while pending (one pending
-    * row-removal algebra at a time — compact to switch).
+    * by-reference carry would resurrect rows).
     * SQL DELETE null semantics: cond=NULL rows are kept. */
   def deleteRows(spark: SparkSession, root: String, cond: Column,
       expectedVersion: Option[Long] = None,
@@ -4018,8 +3875,6 @@ object Versioned {
         s"table at $root is at version $latest, expected $ev")
     }
     val m = readManifest(root, latest)
-    require(m.mor.isEmpty, s"table at $root has ${m.mor.size} pending " +
-      "predicate merge-on-read delete(s); compact before positional deletes")
     val condExpr = resolvedPredicate(spark, root, cond)
     val statsExpr = physForStats(condExpr, m.physNames)
     val candidates = m.files.filter(f => mayMatch(f, statsExpr)).map(_.path)
@@ -4114,7 +3969,7 @@ object Versioned {
     * by PHYSICAL name, so attribute references translate through the
     * manifest's mapping RIGHT AT the probe — never earlier: the
     * logical expression is what round-trips into stored predicates
-    * (merge-on-read deletes) and row filters, and a physically-rewritten
+    * (CHECK constraints) and row filters, and a physically-rewritten
     * predicate there would resolve against the wrong (or no) column. */
   private def physForStats(e: Expression,
       phys: Map[String, String]): Expression =
@@ -4240,7 +4095,6 @@ object Versioned {
       txn: Option[(String, Long)] = None,
       schemaJson: String = null,
       cdf: Seq[String] = Nil,
-      mor: Seq[MorDelete] = Nil,
       partitionBy: Option[Seq[String]] = None,
       props: Map[String, String] = Map.empty,
       dvs: Seq[DvEntry] = Nil,
@@ -4341,7 +4195,7 @@ object Versioned {
         .fold(effProps0)(v => effProps0 + (ColStatsKey -> v))
     val manifest = Manifest(next, action, inline,
       txnApp = txn.map(_._1), txnBatch = txn.map(_._2),
-      schemaJson = Option(schemaJson), cdf = cdf, mor = mor,
+      schemaJson = Option(schemaJson), cdf = cdf,
       partitionBy = partCols, props = effProps, dvs = dvs,
       ts = Some(System.currentTimeMillis()), segments = segments,
       constraints = tableConstraints, dropped = tombstones,
@@ -4427,12 +4281,6 @@ object Versioned {
     * carry their own `_change_type`. */
   private[graft] case class FeedCdf(version: Long,
       files: Seq[String]) extends FeedPiece
-  /** A predicate merge-on-read delete: rows of `files` surviving
-    * `parentPreds` (per file) and matching `pred` are delete
-    * envelopes. */
-  private[graft] case class FeedMorDelete(version: Long,
-      files: Seq[String], pred: String,
-      parentPreds: Map[String, Seq[String]]) extends FeedPiece
   /** A positional delete (dv-delete, or write-delta's delete side):
     * rows AT each file's fresh positions (inline + sidecars newly
     * attached by this version) are delete envelopes. */
@@ -4463,9 +4311,8 @@ object Versioned {
     * commit whose FIRST slice must also apply the commit's fresh
     * deletion vectors (they're position-scoped to carried files, so
     * applying them before the insert postimages finish draining stays
-    * exact); `None` means the commit is INDIVISIBLE (predicate
-    * mor-deletes, CDF rewrites, overwrites — no per-file slicing can
-    * represent them). */
+    * exact); `None` means the commit is INDIVISIBLE (CDF rewrites,
+    * overwrites — no per-file slicing can represent them). */
   private[graft] def feedAdmissionUnits(root: String,
       v: Long): Option[(Seq[(String, Long)], Boolean)] = {
     val vs = versions(root)
@@ -4542,16 +4389,6 @@ object Versioned {
         case "append" | "clone" =>
           if (added.nonEmpty) pieces += FeedInsert(v, added)
         case "compact" | "constraint" | "schema" | "analyze" | "tag" => () // row-identical
-        case "mor-delete" =>
-          rowRemoval {
-            val d = man.mor.last
-            val parentPending = man.mor.dropRight(1)
-            val parentPreds = d.files.map(f =>
-              f -> parentPending.collect {
-                case p if p.files.contains(f) => p.pred
-              }).toMap
-            pieces += FeedMorDelete(v, d.files, d.pred, parentPreds)
-          }
         case "dv-delete" =>
           rowRemoval {
             val fp = freshPositions
@@ -4691,7 +4528,7 @@ object Versioned {
     * change files are immutable commit artifacts). */
   def changeFeed(spark: SparkSession, root: String, afterVersion: Long,
       untilVersion: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col => c, expr, lit}
+    import org.apache.spark.sql.functions.lit
     val upTo = untilVersion.orElse(latestVersion(root)).getOrElse(
       throw new IllegalArgumentException(s"no versions at $root"))
     val vs = versions(root).filter(v => v > afterVersion && v <= upTo)
@@ -4727,24 +4564,11 @@ object Versioned {
               .withColumn("_commit_version", lit(v))
         case "compact" => // row-identical: nothing to emit
         case "constraint" | "schema" | "analyze" | "tag" => // metadata-only: zero row delta
-        case "mor-delete" =>
-          // replay LAZILY from the immutable files the predicate was
-          // scoped to: those files under the PARENT's pending
-          // predicates, matching the one this version added. No change
-          // files exist or are needed — the construction is
-          // deterministic from the manifest alone.
-          val d = man.mor.last
-          val parentLike = man.copy(mor = man.mor.dropRight(1),
-            schemaJson = schemaJson)
-          pieces += readLive(spark, root, parentLike, d.files)
-            .filter(coalesce(expr(d.pred), lit(false)))
-            .withColumn("_change_type", lit("delete"))
-            .withColumn("_commit_version", lit(v))
         case "dv-delete" | "write-delta" =>
-          // replay LAZILY like mor-delete: the rows AT this version's
-          // newly-added positions (this version's position frame minus
-          // the parent's — inline and sidecar forms both), read from
-          // the immutable files. Deterministic from the manifest +
+          // replay LAZILY: the rows AT this version's newly-added
+          // positions (this version's position frame minus the
+          // parent's — inline and sidecar forms both), read from the
+          // immutable files. Deterministic from the manifest +
           // immutable sidecars alone, no change files; double
           // evaluation (file-list collect + lazy semi-join) is safe
           // for exactly that reason. A "write-delta" (delta-based
@@ -4914,7 +4738,7 @@ object Versioned {
 
   /** OPTIMIZE ZORDER for the versioned table: a full rewrite (same
     * action and history semantics as [[compact]] — row-identical, so
-    * change feeds skip it losslessly, pending merge-on-read deletes
+    * change feeds skip it losslessly, pending deletion vectors
     * materialize) whose layout is the Morton curve over `cols`
     * ([[ZOrder.cluster]]): every output file covers one contiguous
     * Z-range, so the manifest min/max recorded for EACH clustered
@@ -4968,15 +4792,14 @@ object Versioned {
     * between a routine maintenance tick and a full rewrite
     * ([[compact]] remains the full rewrite).
     *
-    * Pending merge-on-read deletes interact exactly right: predicates
-    * touching REWRITTEN files are materialized by the rewrite (the
-    * pack reads through [[readLive]]) and dropped for those files;
-    * predicates scoped to carried files stay pending, still scoped to
-    * them. Live rows are identical before and after, so the action is
-    * "compact" and change feeds skip it losslessly.
+    * Pending deletion vectors interact exactly right: vectors on
+    * REWRITTEN files are materialized by the rewrite (the pack reads
+    * through [[readLive]]) and dropped; vectors on carried files stay
+    * pending with them. Live rows are identical before and after, so
+    * the action is "compact" and change feeds skip it losslessly.
     *
     * @return the new version, or the current one when there is nothing
-    *         to pack (≤1 small file and no pending delete to fold in)
+    *         to pack (≤1 small file)
     */
   /** Translate a PARTITION-GRAIN SQL predicate into prune bounds for
     * scoped maintenance (`OPTIMIZE … WHERE`): conjuncts of =, <, <=,
@@ -5062,9 +4885,7 @@ object Versioned {
     val scopedSet = scoped.map(_.path).toSet
     val (small, big0) = scoped.partition(_.bytes < targetBytes)
     val big = big0 ++ m.files.filterNot(f => scopedSet(f.path))
-    val smallSet = small.map(_.path).toSet
-    val predOnSmall = m.mor.exists(_.files.exists(smallSet))
-    if (small.isEmpty || (small.size == 1 && !predOnSmall)) (latest, false)
+    if (small.size <= 1) (latest, false)
     else {
       val packed = readLive(spark, root, m, small.map(_.path))
       val nOut = math.max(1L, math.ceil(
@@ -5083,17 +4904,13 @@ object Versioned {
       val (entries, _) =
         writeBatch(spark, root, packed.coalesce(nOut), statsEff,
           m.partitionBy, bloomEff, bitsEff, hashesEff)
+      // deletion vectors follow the carry/materialize split: packed
+      // files materialized theirs through readLive; carried files keep
+      // their vectors scoped exactly as before
       val carried = big.map(_.path).toSet
-      val stillPending = m.mor
-        .map(d => d.copy(files = d.files.filter(carried)))
-        .filter(_.files.nonEmpty)
-      // deletion vectors follow the same carry/materialize split:
-      // packed files materialized theirs through readLive; carried
-      // files keep their vectors scoped exactly as before
       val stillDvs = m.dvs.filter(d => carried(d.file))
       (publishEntries(root, big ++ entries, latest, "compact",
-        schemaJson = m.schemaJson.orNull, mor = stillPending,
-        dvs = stillDvs), true)
+        schemaJson = m.schemaJson.orNull, dvs = stillDvs), true)
     }
     }
     if (published && reanalyze) reanalyzeAfterMaintenance(spark, root, v)
@@ -5128,9 +4945,9 @@ object Versioned {
   /** REORG — targeted deletion-vector materialization (Delta's
     * `REORG TABLE … APPLY (PURGE)` economics): rewrite ONLY the files
     * whose DELETED FRACTION is at or above `minDeletedFraction`,
-    * folding their pending vectors (and any predicate deletes scoped
-    * to them) into clean replacement files; every other file — and its
-    * own pending state — carries by reference, untouched. Cost is
+    * folding their pending vectors into clean replacement files; every
+    * other file — and its own vectors — carries by reference,
+    * untouched. Cost is
     * O(heavily-deleted files), never O(table): on a 100 TB MoR table
     * where deletes concentrate in a few hot files, this is the
     * maintenance tick that keeps DV overhead bounded without the full
@@ -5167,8 +4984,7 @@ object Versioned {
         deletedByFile.getOrElse(f, 0L).toDouble / rows >= minDeletedFraction
     }.toSet
     if (targets.isEmpty) return latest
-    // read the targets' LIVE rows (vectors anti-joined, predicate
-    // deletes scoped to them applied) and restage them
+    // read the targets' LIVE rows (vectors anti-joined) and restage them
     val packed = readLive(spark, root, m, targets.toSeq.sorted)
     val targetEntries = m.files.filter(f => targets(f.path))
     val liveBytes = targetEntries.map { f =>
@@ -5184,16 +5000,12 @@ object Versioned {
       inhStats, m.partitionBy, inhBlooms, inhBits, inhHashes)
     val carried = m.files.filterNot(f => targets(f.path))
     val carriedSet = carried.map(_.path).toSet
-    // pending state follows the carry/materialize split exactly like
-    // [[optimize]]: rewritten files' vectors and predicate scopes are
-    // materialized (dropped); carried files keep theirs, still scoped
-    val stillPending = m.mor
-      .map(d => d.copy(files = d.files.filter(carriedSet)))
-      .filter(_.files.nonEmpty)
+    // vectors follow the carry/materialize split exactly like
+    // [[optimize]]: rewritten files' vectors are materialized
+    // (dropped); carried files keep theirs, still scoped
     val stillDvs = m.dvs.filter(d => carriedSet(d.file))
     publishEntries(root, carried ++ entries, latest, "compact",
-      schemaJson = m.schemaJson.orNull, mor = stillPending,
-      dvs = stillDvs)
+      schemaJson = m.schemaJson.orNull, dvs = stillDvs)
     }
     // the early no-op exits (`return latest`) bypass this tail — a
     // reorg that rewrote nothing never pays a stats pass
@@ -5212,7 +5024,7 @@ object Versioned {
     val latest = latestVersion(root).getOrElse(
       throw new IllegalArgumentException(s"no versions at $root"))
     publishEntries(root, m.files, latest, "restore",
-      schemaJson = m.schemaJson.orNull, mor = m.mor,
+      schemaJson = m.schemaJson.orNull,
       partitionBy = Some(m.partitionBy), dvs = m.dvs,
       // the restored version's segments are the ones re-referenced —
       // the rollback stays one small manifest even on a huge table
@@ -5228,8 +5040,8 @@ object Versioned {
   /** Zero-copy SHALLOW CLONE (Delta's `CREATE TABLE … SHALLOW CLONE`):
     * publish version 1 of a NEW table at `dstRoot` whose manifest
     * references the source's current (or `asOfVersion`) snapshot —
-    * data files, pending merge-on-read predicates, and deletion
-    * vectors — by ABSOLUTE path. No data is read, copied, or moved;
+    * data files and deletion vectors — by ABSOLUTE path. No data is
+    * read, copied, or moved;
     * the clone is one metadata write regardless of table size.
     *
     * The clone then evolves independently: every write lands under its
@@ -5257,7 +5069,6 @@ object Versioned {
       m.files.map(f => f.copy(path = abs(f.path))),
       parent = 0L, action = "clone",
       schemaJson = m.schemaJson.orNull,
-      mor = m.mor.map(d => d.copy(files = d.files.map(abs))),
       partitionBy = Some(m.partitionBy),
       props = Map("cloneSource" -> srcRoot, "cloneVersion" -> v.toString),
       dvs = m.dvs.map(d =>
@@ -5417,7 +5228,7 @@ object Versioned {
     val legacy = (m.transforms ++ m.legacyTransforms)
       .filterNot(transforms.contains).distinct
     publishEntries(root, m.files, latest, "schema",
-      schemaJson = m.schemaJson.orNull, mor = m.mor, dvs = m.dvs,
+      schemaJson = m.schemaJson.orNull, dvs = m.dvs,
       carryFrom = Some(latest),
       partitionBy = Some(partitionBy), transforms = Some(transforms),
       legacyTransforms = Some(legacy),
@@ -5514,7 +5325,7 @@ object Versioned {
     * commit whose live set is empty (action "overwrite", so change
     * feeds treat it exactly like any other full replacement). Schema,
     * partition layout, and CHECK constraints survive; pending
-    * merge-on-read deletes and deletion vectors are moot and dropped;
+    * deletion vectors are moot and dropped;
     * drop-column tombstones auto-clear (no live file can carry
     * anything). The truncated-away files stay referenced by RETAINED
     * history (time travel still works) and age out through vacuum. */
@@ -5553,8 +5364,9 @@ object Versioned {
   /** DESCRIBE HISTORY: one row per retained version, straight from the
     * manifest log. Driver-side by design — the log is O(versions) of
     * small JSON, never O(data). `num_rows`/`num_bytes` are file-level
-    * manifest sums (rows a pending merge-on-read delete will remove
-    * are still counted until compact materializes them). */
+    * manifest sums (rows a pending deletion vector removes are still
+    * counted until compact materializes them); `num_pending_deletes`
+    * is the number of live files carrying pending deletion vectors. */
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     versions(root).map { v =>
@@ -5563,7 +5375,7 @@ object Versioned {
         m.ts.getOrElse(manifestFile(root, v).lastModified()),
         m.files.size.toLong, m.files.map(_.rows).sum,
         m.files.map(_.bytes).sum, m.txnApp, m.txnBatch, m.cdf.size.toLong,
-        m.mor.size.toLong)
+        m.dvs.size.toLong)
     }.toDF("version", "action", "timestamp_millis", "num_files", "num_rows",
       "num_bytes", "txn_app", "txn_batch", "num_change_files",
       "num_pending_deletes")
@@ -5816,9 +5628,6 @@ object Versioned {
       m.txnApp.map("txnApp" -> _) ++ m.txnBatch.map("txnBatch" -> (_: Any)) ++
       m.schemaJson.map("schema" -> _) ++
       (if (m.cdf.isEmpty) Nil else Seq("cdf" -> m.cdf.asJava)) ++
-      (if (m.mor.isEmpty) Nil else Seq("mor" -> m.mor.map(d =>
-        Map[String, Any]("pred" -> d.pred,
-          "files" -> d.files.asJava).asJava).asJava)) ++
       (if (m.partitionBy.isEmpty) Nil
        else Seq("partitionBy" -> m.partitionBy.asJava)) ++
       (if (m.props.isEmpty) Nil else Seq("props" -> m.props.asJava)) ++
@@ -5889,6 +5698,15 @@ object Versioned {
       s"manifest v$v at $root has format $fmt, newer than this " +
         s"reader's $ManifestFormat — upgrade the reader (parsing a " +
         "newer format could silently return partial data)")
+    // predicate merge-on-read deletes (a `mor` array) are no longer
+    // applied: reading past them would resurrect the deleted rows
+    val mor = Option(node.get("mor")).map(_.size()).getOrElse(0)
+    require(mor == 0,
+      s"manifest v$v at $root carries $mor pending predicate " +
+        "merge-on-read delete(s), which this reader no longer applies " +
+        "(reading the files without them would resurrect deleted " +
+        "rows) — compact the table first, with a release that still " +
+        "applies them")
     val inline =
       node.get("files").elements().asScala.map(parseFileEntry).toSeq
     val segs = Option(node.get("segments")).map(_.elements().asScala
@@ -5904,10 +5722,6 @@ object Versioned {
       schemaJson = Option(node.get("schema")).map(_.asText()),
       cdf = Option(node.get("cdf")).map(_.elements().asScala
         .map(_.asText()).toSeq).getOrElse(Nil),
-      mor = Option(node.get("mor")).map(_.elements().asScala.map { d =>
-        MorDelete(d.get("pred").asText(), d.get("files").elements()
-          .asScala.map(_.asText()).toSeq)
-      }.toSeq).getOrElse(Nil),
       partitionBy = Option(node.get("partitionBy")).map(_.elements()
         .asScala.map(_.asText()).toSeq).getOrElse(Nil),
       props = Option(node.get("props")).map(_.properties().asScala

@@ -693,14 +693,13 @@ object ExtraQueries {
 
   // ---------------------------------------------------------------- x19
   // Merge-on-read DELETE, hash-gated: customer lands in two appends,
-  // then ONE metadata-only deleteDeferred (no data file read or
-  // written — the deletion-vector economics) records the predicate in
-  // the manifest; the read through the registered data source must
-  // anti-filter exactly those rows. DuckDB replays with a plain WHERE
-  // NOT over the raw table — one row resurrected or over-deleted
-  // anywhere in the predicate scoping, per-file application, or SQL
-  // round-trip fails the hash.
-  val x19MorDelete: Q = Q(
+  // then ONE deleteRows (no data file written) records the matching
+  // rows as deletion vectors in the manifest; the read through the
+  // registered data source must anti-filter exactly those rows.
+  // DuckDB replays with a plain WHERE NOT over the raw table — one row
+  // resurrected or over-deleted anywhere in the stats pruning,
+  // per-file vector application, or position join fails the hash.
+  val x19MergeOnReadDelete: Q = Q(
     "x19_mor_delete",
     """SELECT c_custkey, CAST(c_acctbal AS DOUBLE) AS acctbal FROM customer
       |WHERE NOT (c_custkey % 7 = 0)
@@ -715,7 +714,7 @@ object ExtraQueries {
         statsCols = Seq("c_custkey"))
       Versioned.commit(s, root, c.filter(col("c_custkey") % 2 === 0),
         statsCols = Seq("c_custkey"))
-      Versioned.deleteDeferred(s, root, col("c_custkey") % 7 === 0)
+      Versioned.deleteRows(s, root, col("c_custkey") % 7 === 0)
       root
     })
     s.read.format(graft.sources.VersionedSource.Name)
@@ -1005,9 +1004,9 @@ object ExtraQueries {
   // ---------------------------------------------------------------- x26
   // Positional deletion vectors, hash-gated end-to-end: customer lands
   // as two overlapping-range commits, TWO deleteRows calls record
-  // frozen (file, row_index) vectors (x19's predicate-MoR sibling —
-  // here the predicate is evaluated once and only positions persist),
-  // and the read goes through the registered data source. DuckDB
+  // frozen (file, row_index) vectors that MERGE per file (x19 is the
+  // single-delete case), and the read goes through the registered
+  // data source. DuckDB
   // replays the NET state with plain WHERE NOT — one row resurrected
   // by the anti-join, a mis-relativized path, or a lost vector in the
   // manifest round-trip fails the hash.
@@ -2645,13 +2644,13 @@ object ExtraQueries {
         "WHERE o_orderkey % 3 = 2")
       val root = s"$w/r11/ord"
       val before = graft.operators.Versioned.latestVersion(root).get
-      val (e0, _, _) = graft.operators.Versioned.aggMeta(root, before)
+      val (e0, _) = graft.operators.Versioned.aggMeta(root, before)
       val outBefore = e0.filterNot(_.stats("pk")._2 == "3")
         .map(_.path).toSet
       graft.operators.VersionedSql(s,
         s"OPTIMIZE $cat.r11.ord WHERE pk = 3")
       val v = graft.operators.Versioned.latestVersion(root).get
-      val (e1, _, _) = graft.operators.Versioned.aggMeta(root, v)
+      val (e1, _) = graft.operators.Versioned.aggMeta(root, v)
       val scopedAfter = e1.filter(_.stats("pk")._2 == "3")
       require(scopedAfter.size < 3,
         s"x63: pk=3 must pack below its 3-commit debt, got " +
@@ -2784,7 +2783,7 @@ object ExtraQueries {
       s.sql(s"INSERT INTO $cat.r12.cust SELECT * FROM x65_src " +
         "WHERE c_custkey % 2 = 1")
       val v = graft.operators.Versioned.versions(root).last
-      val (entries, _, _) = graft.operators.Versioned.aggMeta(root, v)
+      val (entries, _) = graft.operators.Versioned.aggMeta(root, v)
       val oldGen = entries.filter(e => preFiles(e.path))
       val newGen = entries.filterNot(e => preFiles(e.path))
       require(oldGen.nonEmpty &&
@@ -3359,7 +3358,7 @@ object ExtraQueries {
     x05ApproxDistinct, x06RangeJoin, x07Scd2History, x08AsofForward,
     x09ApproxQuantiles, x10AsofExec, x11AsofExecForward, x12AsofTtl,
     x13HistQuantiles, x14AsofBroadcast, x15CmsFrequency, x16BloomMembership,
-    x17VersionedCdf, x18VersionedRead, x19MorDelete, x20PartitionOverwrite,
+    x17VersionedCdf, x18VersionedRead, x19MergeOnReadDelete, x20PartitionOverwrite,
     x21HeavyHitters, x22KmvDistinct, x23BloomLookup, x24JoinMv,
     x25Bm25Serve, x26DvDelete, x27GapFill, x28CloneBranch, x29OhlcResample,
     x30ReplaceWhere, x31Ewma, x32SqlTimeTravel, x33SqlMerge, x34EwmaLong,

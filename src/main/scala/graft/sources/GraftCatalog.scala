@@ -12,7 +12,6 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{AlwaysTrue, And, BaseRelation, Filter, InsertableRelation, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -43,12 +42,15 @@ import graft.operators.Versioned
   * manifest log's CAS atomicity instead of adding a second source of
   * truth that could diverge from it.
   *
-  * Reads and writes reuse the battle-tested V1 machinery through the
-  * DSv2→V1 bridge Spark itself ships for exactly this (`V1Scan` /
-  * `V1Write`, the JDBC connector's path): scans get manifest-stats
-  * file pruning + commit-time `sizeInBytes` (auto-broadcast), writes
-  * are atomic CAS manifest commits — identical plans and identical
-  * commit semantics to the path-addressed API, just named.
+  * Every plain batch or stream read takes the native DSv2 scan
+  * ([[GraftRowLevelScan]]: vectorized parquet, manifest-stats file
+  * pruning, commit-time statistics for auto-broadcast, pending
+  * deletion vectors applied in the reader) unless a metadata-only
+  * aggregate answers from the manifest. Batch writes ride the
+  * DSv2→V1 write bridge (`V1Write`), streaming and dynamic overwrite
+  * the executor-staged DSv2 write core — every write is an atomic CAS
+  * manifest commit with the path-addressed API's semantics, just
+  * named.
   */
 object GraftCatalog {
   /** The one identifier→path rule both surfaces share — the catalog's
@@ -76,6 +78,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private var catalogName: String = _
   private var warehouse: File = _
+  // the session current when `initialize` ran: the last fallback for
+  // a call from a thread with no active session in a JVM whose default
+  // session was cleared
+  private var initSession: Option[SparkSession] = None
 
   // ---- FunctionCatalog: the partition-transform functions. Spark
   // loads these to RESOLVE the transforms a scan reports in its
@@ -103,11 +109,23 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"catalog '$name' needs spark.sql.catalog.$name.warehouse=<dir>")
     warehouse = new File(w).getAbsoluteFile
     warehouse.mkdirs()
+    initSession =
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
   }
 
   override def name(): String = catalogName
 
-  private def spark: SparkSession = SparkSession.active
+  // the ACTIVE session first: streaming micro-batches plan on a cloned
+  // session whose conf must govern (see GraftWriteLayout.conf); then
+  // the JVM default; then the session that initialized this catalog
+  private def spark: SparkSession =
+    SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .orElse(initSession)
+      .getOrElse(throw new IllegalStateException(
+        s"catalog '$catalogName' has no Spark session: none is active " +
+          "on this thread, none is the JVM default, and none was " +
+          "current when the catalog initialized"))
 
   private def checkPart(p: String): String = GraftCatalog.checkPart(p)
 
@@ -214,7 +232,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               import s.implicits._
               val ver = v.getOrElse(
                 Versioned.latestVersion(baseRoot).get)
-              val (entries, _, _) = Versioned.aggMeta(baseRoot, ver)
+              val (entries, _) = Versioned.aggMeta(baseRoot, ver)
               entries.map(e => (e.path, e.bytes, e.rows))
                 .toDF("path", "bytes", "rows")
             }
@@ -640,9 +658,10 @@ final class GraftTable(spark: SparkSession, fullName: String,
     * are the row identity the delta-based operation's `rowId` speaks
     * (and what the deletion-vector verbs key on); the group-based
     * rewrite carries `_file` alone for file provenance. Served by the
-    * native scan (which all plain catalog reads now take). */
+    * native scan. A name the table schema declares as a data column
+    * is omitted: there it reads as data. */
   override def metadataColumns(): Array[MetadataColumn] =
-    Array(
+    Array[MetadataColumn](
       new MetadataColumn {
         override def name(): String = "_file"
         override def dataType(): org.apache.spark.sql.types.DataType =
@@ -658,7 +677,7 @@ final class GraftTable(spark: SparkSession, fullName: String,
         override def isNullable: Boolean = false
         override def comment(): String =
           "row index within the row's data file"
-      })
+      }).filterNot(c => schema.fieldNames.exists(_.equalsIgnoreCase(c.name)))
 
   /** The effective row-level mode for this snapshot: `cow` (group-based
     * copy-on-write replace), `mor` (delta-based deletion vectors), or
@@ -942,55 +961,30 @@ final class GraftScanBuilder(spark: SparkSession, root: String,
       agg: org.apache.spark.sql.connector.expressions.aggregate
         .Aggregation): Boolean = supportCompletePushDown(agg)
 
-  // Plain catalog batch reads take the NATIVE DSv2 scan — Spark's
-  // vectorized parquet reader with FilePartition-style packing/
-  // splitting, manifest-stats pruning, commit-time statistics
-  // (broadcast decisions from manifest truth), and the `_file`
-  // provenance metadata column when asked for (a user SELECT, or
-  // Spark's runtime-group-filter subquery for row-level DML). Pending
-  // DELETION VECTORS stay on the native scan too: the columnar reader
-  // applies them as a per-batch live-row mapping (the Delta/Iceberg DV
-  // read architecture), so MoR's steady state between compactions
-  // keeps `BatchScan … ColumnarToRow`, splitting, and packing. The V1
-  // bridge remains ONLY for snapshots with pending PREDICATE
-  // merge-on-read deletes (no native reader can re-evaluate those —
-  // `readLive` replays them) and for tables whose SCHEMA declares a
-  // real `_file`/`_pos` column: there the name means data, never
-  // provenance (Spark suppresses the conflicting metadata column for
-  // the same reason).
-  override def build(): Scan = {
-    // a pushed metadata-only aggregation supersedes everything: the
-    // result is already computed, the scan is a LocalScan
-    aggScan.foreach(s => return s)
-    // a schema-declared `_file`/`_pos` shadows the metadata column —
-    // the name means DATA there, and the native scan would misread it
-    val shadowed = Seq("_file", "_pos")
-      .exists(tableSchema.fieldNames.contains)
-    val wantsMeta = Seq("_file", "_pos")
-      .exists(required.fieldNames.contains) && !shadowed
-    // streaming (`readStream.table`) rides the same builder: the
-    // returned scan carries the native micro-batch stream factory
-    val mkStream = () => new GraftMicroBatchStream(spark, root,
-      required, tableSchema, options)
-    if (!shadowed && !Versioned.pendingPredMor(root, version))
+  // Two outcomes: a pushed metadata-only aggregation (a LocalScan —
+  // the result is already computed), or the NATIVE DSv2 scan every
+  // other catalog batch and stream read takes — Spark's vectorized
+  // parquet reader with FilePartition-style packing/splitting,
+  // manifest-stats pruning, commit-time statistics (broadcast
+  // decisions from manifest truth), and the `_file`/`_pos` provenance
+  // metadata columns when asked for (a user SELECT, or Spark's
+  // runtime-group-filter subquery for row-level DML). Pending DELETION
+  // VECTORS stay on the native scan: the columnar reader applies them
+  // as a per-batch live-row mapping (the Delta/Iceberg DV read
+  // architecture), so MoR's steady state between compactions keeps
+  // `BatchScan … ColumnarToRow`, splitting, and packing. A table whose
+  // SCHEMA declares a `_file`/`_pos` column reads it as data (the scan
+  // decides that from the pinned schema).
+  override def build(): Scan =
+    aggScan.getOrElse(
       new GraftRowLevelScan(spark, root, version, required,
         pushed.toIndexedSeq, _ => (), dvAware = true,
-        streamFactory = Some(mkStream), spjAllowed = true,
-        limitHint = limitHint.filter(_ => residual.isEmpty))
-    else if (wantsMeta)
-      // pending PREDICATE deletes + a provenance projection: the
-      // native scan refuses loudly at plan time (a raw read would
-      // resurrect rows; positions can't be served through readLive)
-      new GraftRowLevelScan(spark, root, version, required,
-        pushed.toIndexedSeq, _ => (), dvAware = true,
-        streamFactory = Some(mkStream), spjAllowed = true)
-    else
-      // pending predicate deletes without a provenance projection: the
-      // V1 bridge's readLive replays the predicate algebra; shadowed
-      // names always take the bridge (there they are data columns)
-      new GraftV1ScanBridge(spark, root, version, pushed.toIndexedSeq,
-        required, streamFactory = Some(mkStream))
-  }
+        // streaming (`readStream.table`) rides the same builder: the
+        // scan carries the native micro-batch stream factory
+        streamFactory = Some(() => new GraftMicroBatchStream(spark, root,
+          required, tableSchema, options)),
+        spjAllowed = true,
+        limitHint = limitHint.filter(_ => residual.isEmpty)))
 }
 
 /** Read-only catalog METADATA TABLE: serves a driver-computed frame
@@ -1020,63 +1014,6 @@ private[sources] final class GraftMetaTable(tableName: String,
         override def description(): String = s"GraftMetaTable($tableName)"
       }
     }
-}
-
-/** The DSv2→V1 scan bridge (`V1Scan`, the JDBC connector's own path):
-  * planning stays DSv2 (catalog identity, pushdown negotiation, time
-  * travel), execution is the pruned V1 scan — one code path serves
-  * both addressing modes, so every stats-pruning property the V1 spec
-  * suite pins holds verbatim for catalog reads. */
-final class GraftV1ScanBridge(spark: SparkSession, root: String,
-    version: Long, filters: Seq[Filter], required: StructType,
-    streamFactory: Option[() => org.apache.spark.sql.connector.read
-      .streaming.MicroBatchStream] = None)
-    extends V1Scan {
-
-  override def readSchema(): StructType = required
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    streamFactory.map(_.apply()).getOrElse(
-      throw new UnsupportedOperationException(
-        s"$description: micro-batch read not available on this scan"))
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftV1Relation(context, root, version, filters, required)
-      .asInstanceOf[T]
-
-  override def description(): String =
-    s"GraftScan($root, v$version, ${filters.mkString(", ")})"
-}
-
-final class GraftV1Relation(override val sqlContext: SQLContext,
-    root: String, version: Long, filters: Seq[Filter],
-    required: StructType) extends BaseRelation with TableScan {
-
-  override def schema: StructType = required
-
-  // commit-time truth from the manifest — a small catalog-named
-  // dimension auto-broadcasts on metadata, no AQE runtime discovery
-  override def sizeInBytes: Long = Versioned.tableBytes(root, version)
-
-  // buildScan below emits InternalRows straight from the native
-  // parquet exec; declaring needConversion=false skips the per-row
-  // external-internal round-trip (documented BaseRelation contract)
-  override def needConversion: Boolean = false
-
-  override def buildScan(): RDD[Row] = {
-    val spark = sqlContext.sparkSession
-    val pruned = Versioned.candidateFilesForBounds(root, version,
-      VersionedSource.bounds(filters))
-    val base = Versioned.readVersionFiles(spark, root, version, pruned)
-    val filtered = filters.flatMap(VersionedSource.toColumn)
-      .foldLeft(base)(_ filter _)
-    filtered.select(required.fieldNames.toIndexedSeq.map(col): _*)
-      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
-
-  override def toString: String = s"GraftV1Relation($root, v$version)"
 }
 
 /** The write builder. Batch modes ride the DSv2→V1 bridge: INSERT

@@ -38,8 +38,9 @@ import graft.operators.Versioned
   *  - any pushed/residual filter (Spark only offers aggregates when no
   *    post-scan filter remains, but the builder re-checks — advisory
   *    file pruning must never become load-bearing);
-  *  - pending merge-on-read state (predicate deletes, deletion
-  *    vectors): per-file counts over-count deleted rows;
+  *  - MIN/MAX/COUNT(col) under pending deletion vectors: per-file
+  *    stats still describe deleted rows (COUNT(*) answers exactly as
+  *    Σ(rows − deleted));
   *  - a live file missing the needed stat (schema evolution added the
   *    column later; a block-mixed file; an unsupported footer type);
   *  - float/double MIN/MAX (parquet footer min/max are unreliable
@@ -78,12 +79,12 @@ private[sources] object GraftMetaAgg {
     * (`count(*) WHERE day = …`). Keyed by the schema field's exact
     * name (what a resolved filter attribute carries); a column whose
     * declared partition name differs in case is skipped — consumption
-    * must be refused whenever the stats lookup could miss. DV/MoR
-    * state is irrelevant here: deletes only REMOVE rows, and a
-    * file-exact prune stays exact on the survivors. */
+    * must be refused whenever the stats lookup could miss. Pending
+    * deletion vectors are irrelevant here: deletes only REMOVE rows,
+    * and a file-exact prune stays exact on the survivors. */
   private[sources] def exactPartitionCols(root: String, version: Long,
       tableSchema: StructType): Map[String, DataType] = {
-    val (entries, physNames, _) = Versioned.aggMeta(root, version)
+    val (entries, physNames) = Versioned.aggMeta(root, version)
     Versioned.partitionByOf(root, Some(version)).flatMap { pc =>
       tableSchema.fields.find(_.name == pc).flatMap { f =>
         val okType = f.dataType match {
@@ -113,7 +114,7 @@ private[sources] object GraftMetaAgg {
     * tuple fails loudly (it cannot belong to a hive-layout partition). */
   private[sources] def partitionTuples(root: String, version: Long,
       partSchema: StructType): Seq[InternalRow] = {
-    val (entries, physNames, _) = Versioned.aggMeta(root, version)
+    val (entries, physNames) = Versioned.aggMeta(root, version)
     val cols = partSchema.fields.toSeq.map(f =>
       (physNames.getOrElse(f.name, f.name), f.dataType))
     entries.map { e =>
@@ -133,15 +134,13 @@ private[sources] object GraftMetaAgg {
   def tryCompute(spark: org.apache.spark.sql.SparkSession,
       root: String, version: Long, tableSchema: StructType,
       agg: Aggregation, pruned: Option[Set[String]]): Option[Scan] = {
-    val (live, physNames, _) = Versioned.aggMeta(root, version)
-    val (morPred, dvPending) = Versioned.pendingSplit(root, version)
-    // predicate merge-on-read deletes poison every per-file fact;
+    val (live, physNames) = Versioned.aggMeta(root, version)
     // DELETION VECTORS are exact — COUNT(*) stays answerable as
     // Σ(rows − deleted(file)) (MoR's steady state between compactions
     // keeps its watermark/count probes metadata-only), while
     // min/max/count(col) still refuse (a deleted row may carry the
     // extremum or shift the null count)
-    if (morPred) return None
+    val dvPending = Versioned.pendingDvEntries(root, version).nonEmpty
     val files = pruned match {
       case Some(keep) => live.filter(e => keep(e.path))
       case None => live

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -28,18 +28,17 @@ import graft.operators.Versioned
   *  - projecting the `_change_type` / `_commit_version` METADATA
   *    columns upgrades the stream to the full row-level change feed
   *    ([[Versioned.changeFeed]] semantics): inserts from new files,
-  *    CoW merge/delete/update from their cdf files, positional and
-  *    predicate merge-on-read deletes replayed lazily from the
-  *    manifest + immutable sidecars — byte-equal to the batch feed.
+  *    CoW merge/delete/update from their cdf files, deletion-vector
+  *    deletes replayed lazily from the manifest + immutable sidecars
+  *    — byte-equal to the batch feed.
   *
   * Reader options ride the catalog path: `startingVersion` (default
   * 0 = full history), `maxVersionsPerTrigger` (admission control),
   * `skipChangeCommits`. Insert envelopes — the hot path — read
   * through Spark's VECTORIZED parquet reader with the envelope
   * constants riding the partition-value mechanism; replay pieces
-  * (cdf / predicate / positional) are row-grain with driver-bound
-  * predicate expressions and per-file position sets, all O(changed
-  * data), never a snapshot re-read. */
+  * (cdf / positional) are row-grain with per-file position sets, all
+  * O(changed data), never a snapshot re-read. */
 final class GraftMicroBatchStream(spark: SparkSession, root: String,
     required: StructType, tableSchema: StructType,
     options: CaseInsensitiveStringMap)
@@ -97,8 +96,8 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
     required.fieldNames.drop(dataCount).toIndexedSeq
   private val wantsEnvelope = tail.contains("_change_type")
   private val dataSchema = StructType(required.fields.take(dataCount))
-  // streaming scans are not column-pruned today; if a future engine
-  // prunes, predicate binding below would silently mis-resolve — pin it
+  // streaming scans are not column-pruned today, and only the full
+  // table projection is exercised — pin it
   require(dataSchema.fieldNames.sameElements(tableSchema.fieldNames),
     "the streaming scan expects the full table schema projection, got " +
       dataSchema.fieldNames.mkString(", "))
@@ -256,7 +255,6 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
         if (v == fromV && fromIdx >= 0) files = files.drop(fromIdx.toInt)
         if (files.isEmpty) None else Some(Versioned.FeedInsert(v, files))
       case p @ Versioned.FeedCdf(v, _) => notPartial(v); Some(p)
-      case p @ Versioned.FeedMorDelete(v, _, _, _) => notPartial(v); Some(p)
       case p @ Versioned.FeedDvDelete(v, _) =>
         // a write-delta commit drains BOUNDED: its DV application rode
         // the commit's FIRST slice, so a window CONTINUING the commit
@@ -265,17 +263,12 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
         // (v == toV, toIdx ≥ 0) includes it.
         if (v == fromV && fromIdx >= 0) None else Some(p)
     }
-    // thread the WINDOW's column mapping and predicate texts to the
-    // factory (created right after this in both batch and micro-batch
-    // execution): re-reading the LATEST manifest there would race a
-    // rename or a new MoR delete committed between plan and factory —
-    // the current batch must read its files under the names and
-    // predicates its own window was planned against
+    // thread the WINDOW's column mapping to the factory (created right
+    // after this in both batch and micro-batch execution): re-reading
+    // the LATEST manifest there would race a rename committed between
+    // plan and factory — the current batch must read its files under
+    // the names its own window was planned against
     lastWindowPhys = physNames
-    lastWindowPredTexts = pieces.collect {
-      case Versioned.FeedMorDelete(_, _, pred, parentPreds) =>
-        pred +: parentPreds.values.flatten.toSeq
-    }.flatten.distinct
     val rootAbs = new java.io.File(root).getAbsolutePath
     def abs(rel: String) = {
       val f = new java.io.File(rel)
@@ -301,10 +294,6 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
       case Versioned.FeedCdf(v, fs) =>
         parts ++= fs.map(f =>
           GraftFeedPartition(Seq(GraftFeedChunk(abs(f), f, v, kind = 1))))
-      case Versioned.FeedMorDelete(v, fs, pred, parentPreds) =>
-        parts ++= fs.map(f => GraftFeedPartition(Seq(GraftFeedChunk(
-          abs(f), f, v, kind = 2, matchPred = pred,
-          keepNotPreds = parentPreds.getOrElse(f, Nil)))))
       case Versioned.FeedDvDelete(v, perFile) =>
         parts ++= perFile.map { case (f, inline, sidecars) =>
           GraftFeedPartition(Seq(GraftFeedChunk(abs(f), f, v, kind = 3,
@@ -327,7 +316,6 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
   @volatile private var lastWindowAllInserts = true
   @volatile private var lastWindowPhys: Map[String, String] =
     Versioned.plannedMeta(root).physNames
-  @volatile private var lastWindowPredTexts: Seq[String] = Nil
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val physNames = lastWindowPhys
@@ -338,8 +326,6 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
     // DataFrame verbs) — requested logical + the in-file change type
     val cdfRequested = StructType(dataSchema.fields :+
       StructField("_change_type", StringType, nullable = true))
-    // predicate binding happens DRIVER-side against the logical
-    // schema; bound expressions ship to tasks like any task closure
     val vectorized = lastWindowAllInserts &&
       spark.sessionState.conf.parquetVectorizedReaderEnabled &&
         org.apache.spark.sql.GraftParquetIO.isVectorizable(spark, physData)
@@ -348,21 +334,9 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
       org.apache.spark.sql.GraftParquetIO.taskReadConf(spark, cdfRequested),
       org.apache.spark.sql.GraftParquetIO.taskReadConf(spark,
         GraftParquetReaderFactory.DvSchema),
-      tail, dataSchema.fields.map(_.dataType).toIndexedSeq,
-      bindPredicates(), vectorized,
+      tail, dataSchema.fields.map(_.dataType).toIndexedSeq, vectorized,
       org.apache.spark.sql.GraftParquetIO.columnarBatchSize(spark))
   }
-
-  /** Bind every predicate SQL the PLANNED window's mor-delete pieces
-    * reference: predicates come per chunk as SQL text, and expression
-    * binding needs the analyzer (driver-only) — so bind DRIVER-side at
-    * factory creation, from the texts the window plan itself collected
-    * (never from the latest manifest, which a concurrent commit could
-    * have moved past the planned window). Bounded by the window's
-    * pending-predicate count, typically zero or a handful. */
-  private def bindPredicates(): Map[String, Expression] =
-    lastWindowPredTexts.map(t => t -> org.apache.spark.sql.GraftParquetIO
-      .boundPredicate(spark, dataSchema, t, nullVerdict = false)).toMap
 
   override def commit(end: Offset): Unit = ()
 
@@ -375,13 +349,10 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
 /** One feed chunk: a whole file plus its envelope recipe.
   * kind 0 = insert (constants: 'insert', version);
   * kind 1 = cdf file (change type IN the file, version constant);
-  * kind 2 = predicate-delete replay (rows surviving `keepNotPreds`
-  *          and matching `matchPred` emit as deletes);
   * kind 3 = positional-delete replay (rows AT `positions` ∪ sidecar
   *          positions emit as deletes). */
 private[sources] final case class GraftFeedChunk(path: String,
     relPath: String, version: Long, kind: Int,
-    matchPred: String = "", keepNotPreds: Seq[String] = Nil,
     positions: Seq[Long] = Nil, sidecars: Seq[String] = Nil)
 
 private[sources] final case class GraftFeedPartition(
@@ -393,7 +364,6 @@ private[sources] final class GraftFeedReaderFactory(
     dvConf: SerializableConfiguration,
     tail: Seq[String],
     dataTypes: IndexedSeq[org.apache.spark.sql.types.DataType],
-    boundPreds: Map[String, Expression],
     vectorized: Boolean, capacity: Int) extends PartitionReaderFactory {
 
   import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -453,8 +423,6 @@ private[sources] final class GraftFeedReaderFactory(
       private var chunk: GraftFeedChunk = _
       private val joined = new JoinedRow
       private var tailRow: GenericInternalRow = _
-      private var keep: Seq[Expression] = Nil
-      private var matchP: Expression = _
       private var bits: java.util.BitSet = _
       private var pos = -1L
       private var row: InternalRow = _
@@ -498,13 +466,6 @@ private[sources] final class GraftFeedReaderFactory(
           reader = org.apache.spark.sql.GraftParquetIO
             .openRowReader(conf.value, chunk.path)
           pos = -1L
-          keep = chunk.keepNotPreds.map(t => boundPreds.getOrElse(t,
-            throw new IllegalStateException(s"unbound mor predicate: $t")))
-          matchP =
-            if (chunk.kind == 2) boundPreds.getOrElse(chunk.matchPred,
-              throw new IllegalStateException(
-                s"unbound mor predicate: ${chunk.matchPred}"))
-            else null
           bits = if (chunk.kind == 3) sidecarBits(chunk) else null
           if (tail.nonEmpty) {
             tailRow = new GenericInternalRow(tail.length)
@@ -524,10 +485,6 @@ private[sources] final class GraftFeedReaderFactory(
       private def admit(r: InternalRow): Boolean = chunk.kind match {
         case 0 => true
         case 1 => true
-        case 2 =>
-          // survives every parent predicate (not already deleted) AND
-          // matches this delete's predicate
-          keep.forall(_.eval(r) == false) && matchP.eval(r) == true
         case 3 => pos += 1; bits.get(pos.toInt)
         case k => throw new IllegalStateException(s"unknown kind $k")
       }

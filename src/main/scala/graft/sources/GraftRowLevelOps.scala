@@ -163,17 +163,11 @@ final class GraftRowLevelScan(spark: SparkSession, root: String,
   import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 
-  // Pending PREDICATE merge-on-read deletes refuse always — no native
-  // reader can re-evaluate them. Pending DELETION VECTORS refuse on a
-  // RAW scan (the group-based copy-on-write operation, whose publish
-  // would refuse anyway — this fails at plan time) but are
-  // ANTI-FILTERED per file by a DV-AWARE scan (plain metadata-column
-  // reads, the delta operation's matching scan): live rows only,
-  // never a resurrected one.
-  require(!Versioned.pendingPredMor(root, version),
-    s"table at $root has pending predicate merge-on-read delete(s); " +
-      "compact to materialize them before a native scan (row-level " +
-      "operation or a read projecting provenance metadata columns)")
+  // Pending DELETION VECTORS refuse on a RAW scan (the group-based
+  // copy-on-write operation, whose publish would refuse anyway — this
+  // fails at plan time) but are ANTI-FILTERED per file by a DV-AWARE
+  // scan (plain catalog reads, the delta operation's matching scan):
+  // live rows only, never a resurrected one.
   private val dvs: Seq[Versioned.DvEntry] =
     Versioned.pendingDvEntries(root, version)
   require(dvAware || dvs.isEmpty,
@@ -183,10 +177,19 @@ final class GraftRowLevelScan(spark: SparkSession, root: String,
 
   private val planned = Versioned.plannedMeta(root)
   private def phys(n: String): String = planned.physNames.getOrElse(n, n)
-  // `_file`/`_pos` in `required` are METADATA here by construction:
-  // the scan builders route tables whose SCHEMA declares either name
-  // away from this scan (there the name means data)
-  private val needPos = required.fieldNames.contains("_pos")
+  // `_file`/`_pos` in `required` are the provenance METADATA columns
+  // unless the pinned table schema declares a data column of that name
+  // (then GraftTable.metadataColumns omits it and it reads as data)
+  private val metaNames: Set[String] = {
+    val asked = Seq("_file", "_pos").filter(required.fieldNames.contains)
+    if (asked.isEmpty) Set.empty
+    else {
+      val declared = Versioned.tableSchema(spark, root, Some(version))
+        .fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+      asked.filterNot(declared).toSet
+    }
+  }
+  private val needPos = metaNames("_pos")
   private val dvActive = dvs.nonEmpty
   // the exact per-file DV-deleted map is derived from the manifest
   // ONCE per scan (lazy — pure-CoW scans never pay it) and shared by
@@ -203,7 +206,7 @@ final class GraftRowLevelScan(spark: SparkSession, root: String,
   // Spark appends metadata output after data output, so they can only
   // sit in the trailing positions.
   private val metaIdx = required.fieldNames.zipWithIndex
-    .filter { case (n, _) => n == "_file" || n == "_pos" }
+    .filter { case (n, _) => metaNames(n) }
   private val dataCount = required.length - metaIdx.length
   require(metaIdx.forall(_._2 >= dataCount),
     s"metadata columns must trail the data columns, got " +
@@ -281,7 +284,7 @@ final class GraftRowLevelScan(spark: SparkSession, root: String,
       val txByHidden = Versioned.transformsOf(root, Some(version))
         .map(t => t.hidden -> t).toMap
       val legacyTx = Versioned.legacyTransformsOf(root, Some(version))
-      val (entries, physAt, _) = Versioned.aggMeta(root, version)
+      val (entries, physAt) = Versioned.aggMeta(root, version)
       @annotation.tailrec
       def gcd(a: Int, b: Int): Int = if (b == 0) a else gcd(b, a % b)
       // one decode CANDIDATE per spec generation: the physical stats
@@ -673,7 +676,7 @@ final class GraftRowLevelScan(spark: SparkSession, root: String,
     * filters touching the metadata columns never push. */
   private def physFilter(f: Filter): Option[Filter] = {
     import org.apache.spark.sql.sources._
-    if (f.references.exists(r => r == "_file" || r == "_pos")) None
+    if (f.references.exists(metaNames)) None
     else f match {
       case EqualTo(a, v) => Some(EqualTo(phys(a), v))
       case EqualNullSafe(a, v) => Some(EqualNullSafe(phys(a), v))
@@ -767,7 +770,7 @@ final class GraftRowLevelScan(spark: SparkSession, root: String,
   // partition pruning on joins through the same stats-bound prune.
   override def filterAttributes(): Array[NamedReference] =
     if (spjState.isDefined) Array.empty // grouping stability over DPP
-    else if (required.fieldNames.contains("_file"))
+    else if (metaNames("_file"))
       Array(Expressions.column("_file"))
     else planned.partitionBy
       .find(pc => required.fieldNames.exists(_.equalsIgnoreCase(pc)))
@@ -782,7 +785,8 @@ final class GraftRowLevelScan(spark: SparkSession, root: String,
     val bounds = predicates.toSeq.flatMap(runtimeBound)
     if (none) files = Nil
     else {
-      val (fileBounds, statBounds) = bounds.partition(_.col == "_file")
+      val (fileBounds, statBounds) =
+        bounds.partition(b => b.col == "_file" && metaNames("_file"))
       if (statBounds.nonEmpty) {
         val narrowed = Versioned.candidateFilesForBounds(root, version,
           VersionedSource.bounds(pushed) ++ statBounds).toSet

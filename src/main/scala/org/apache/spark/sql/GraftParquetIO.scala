@@ -254,34 +254,6 @@ object GraftParquetIO {
     }
   }
 
-  /** Resolve a SQL predicate against `schema` and bind it for
-    * task-side interpreted evaluation with an explicit NULL verdict:
-    * `coalesce(cond, default)` — the change-feed replay needs both
-    * polarities (keep-if-not-deleted wants NULL→false like SQL DELETE;
-    * CHECK wants NULL→true). Columns absent from `schema` evaluate as
-    * NULL, like [[boundCheck]]. */
-  def boundPredicate(spark: SparkSession, schema: StructType,
-      conditionSql: String, nullVerdict: Boolean): Expression = {
-    val attrs = DataTypeUtils.toAttributes(schema)
-    val have = schema.fieldNames
-      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    val parsed = spark.sessionState.sqlParser
-      .parseExpression(conditionSql).transformUp {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if !have(a.nameParts.last.toLowerCase(java.util.Locale.ROOT)) =>
-          Literal(null, NullType)
-      }
-    val analyzed = spark.sessionState.analyzer
-      .execute(Filter(parsed, LocalRelation(attrs)))
-    val resolved = analyzed.collectFirst { case f: Filter => f.condition }
-      .getOrElse(throw new IllegalStateException(
-        s"predicate '$conditionSql' did not resolve to a filter"))
-    BindReferences.bindReference(
-      Coalesce(Seq(resolved,
-        if (nullVerdict) Literal.TrueLiteral else Literal.FalseLiteral)),
-      attrs)
-  }
-
   /** Resolve a SQL CHECK predicate against `schema` and bind it for
     * task-side interpreted evaluation (per-row constraint enforcement
     * inside an executor `DataWriter`, where no DataFrame exists to

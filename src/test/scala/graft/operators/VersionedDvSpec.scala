@@ -10,13 +10,19 @@ import graft.SparkSpec
   * the condition AT DELETE TIME (frozen set — later appends that would
   * match are untouched), write zero data files, merge across repeated
   * deletes, materialize on compact, refuse copy-on-write verbs while
-  * pending, replay as row-level delete envelopes in the change feed,
-  * and hold through the registered data source. */
+  * pending, replay as row-level delete envelopes in the change feed
+  * (envelope-identical to the copy-on-write feed), and hold through
+  * pruned reads, restore, and the registered data source. A manifest
+  * in the retired predicate-delete form is refused, never read past. */
 class VersionedDvSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft-vdv").toString + "/t"
+
+  private def pendingDeletes(root: String, v: Long): Long =
+    Versioned.history(spark, root).filter(col("version") === v)
+      .select("num_pending_deletes").as[Long].head()
 
   private def dataFiles(root: String): Int = {
     def walk(f: java.io.File): Int =
@@ -55,13 +61,14 @@ class VersionedDvSpec extends SparkSpec {
     Versioned.deleteRows(spark, root, col("v") < 10.0)
     assert(Versioned.read(spark, root).count() === 41)
     // rows that WOULD match the predicate arrive later — a positional
-    // delete must not touch them (contrast: deleteDeferred's pending
-    // predicate would; its spec proves scoping instead)
-    Versioned.commit(spark, root, rows(51 to 60, "late")
+    // delete must not touch them
+    val v = Versioned.commit(spark, root, rows(51 to 60, "late")
       .withColumn("v", lit(1.0)).coalesce(1))
     assert(Versioned.read(spark, root)
       .filter(col("tag") === "late").count() === 10,
       "late matching rows must survive a frozen positional delete")
+    // the append carried the pending vector on the first file
+    assert(pendingDeletes(root, v) === 1L)
   }
 
   test("repeated deletes merge vectors; no-op match publishes nothing") {
@@ -93,12 +100,10 @@ class VersionedDvSpec extends SparkSpec {
       Versioned.delete(spark, root, col("id") === 20L)
     }
     assert(eD.getMessage.contains("deletion vector"))
-    val eP = intercept[IllegalArgumentException] {
-      Versioned.deleteDeferred(spark, root, col("id") === 20L)
-    }
-    assert(eP.getMessage.contains("deletion vector"))
-    Versioned.compact(spark, root)
+    assert(pendingDeletes(root, 2) === 1L)
+    val vc = Versioned.compact(spark, root)
     assert(Versioned.read(spark, root).count() === 30)
+    assert(pendingDeletes(root, vc) === 0L)
     // cleared: CoW works again and rows stay gone
     Versioned.delete(spark, root, col("id") === 20L)
     assert(Versioned.read(spark, root).count() === 29)
@@ -115,11 +120,67 @@ class VersionedDvSpec extends SparkSpec {
     // pack only the small files; the big file (with a vector) carries
     val bigBytes = new java.io.File(root, Versioned.files(root, 1).head)
       .length()
-    Versioned.optimize(spark, root, targetBytes = bigBytes)
+    val v = Versioned.optimize(spark, root, targetBytes = bigBytes)
     val got = Versioned.read(spark, root)
     assert(got.count() === 2017)
     assert(got.filter(col("id").isin(5L, 2005L, 2015L)).count() === 0,
       "deletes must hold through carried AND packed files")
+    // the packed files' vectors materialized; the big file's stays
+    assert(pendingDeletes(root, v) === 1L)
+  }
+
+  test("readPruned, the path source, and restore honour pending vectors") {
+    val root = freshRoot()
+    Seq(1 to 10, 11 to 20).foreach { r =>
+      Versioned.commit(spark, root, rows(r, "a").coalesce(1),
+        statsCols = Seq("id"))
+    }
+    val vDel = Versioned.deleteRows(spark, root, col("id") === 15L)
+    // only the second file carries the vector
+    assert(Versioned.readPruned(spark, root, "id", 11L, 20L).count() === 9)
+    assert(Versioned.readPruned(spark, root, "id", 1L, 10L).count() === 10)
+    val viaSource = spark.read.format(graft.sources.VersionedSource.Name)
+      .option("path", root).load()
+    assert(viaSource.count() === 19)
+    assert(viaSource.filter(col("id") === 15L).count() === 0)
+    // restore to the DV-pending version keeps its vectors
+    Versioned.commit(spark, root, rows(100 to 100, "x"),
+      statsCols = Seq("id"))
+    val vRestored = Versioned.restore(root, vDel)
+    assert(Versioned.read(spark, root).count() === 19)
+    assert(pendingDeletes(root, vRestored) === 1L)
+  }
+
+  test("the DV change feed is envelope-identical to copy-on-write") {
+    def build(root: String, dv: Boolean): Unit = {
+      Versioned.commit(spark, root,
+        (1 to 10).map(i => (i.toLong, s"r$i")).toDF("id", "tag"),
+        statsCols = Seq("id"))
+      if (dv) Versioned.deleteRows(spark, root, col("id") % 3 === 0)
+      else Versioned.delete(spark, root, col("id") % 3 === 0,
+        statsCols = Seq("id"), cdf = true)
+    }
+    val a = freshRoot(); build(a, dv = true)
+    val b = freshRoot(); build(b, dv = false)
+    def feed(root: String) = Versioned.changeFeed(spark, root, 0L)
+      .select("_commit_version", "_change_type", "id", "tag")
+      .as[(Long, String, Long, String)].collect().toSet
+    assert(feed(a) === feed(b), "DV envelopes diverge from copy-on-write")
+    assert(feed(a).count(_._2 == "delete") === 3)
+  }
+
+  test("a manifest carrying predicate deletes is refused, naming compact") {
+    val root = freshRoot()
+    Versioned.commit(spark, root, rows(1 to 10, "a").coalesce(1),
+      statsCols = Seq("id"))
+    VersionedDvSpec.writePredicateDeleteManifest(root)
+    val e = intercept[IllegalArgumentException] {
+      Versioned.read(spark, root)
+    }
+    assert(e.getMessage.contains("predicate merge-on-read"), e.getMessage)
+    assert(e.getMessage.contains("compact the table first"), e.getMessage)
+    // the version before it still reads
+    assert(Versioned.readVersion(spark, root, 1).count() === 10)
   }
 
   test("REORG APPLY (PURGE): only the heavily-deleted file rewrites; " +
@@ -247,5 +308,26 @@ class VersionedDvSpec extends SparkSpec {
     assert(df.filter(col("id") === 15).count() === 0)
     // pushed point lookup on a surviving row still works
     assert(df.filter(col("id") === 25).count() === 1)
+  }
+}
+
+object VersionedDvSpec {
+  /** Publish, by hand, the next version of `root` in the retired
+    * predicate merge-on-read form: the latest manifest plus a `mor`
+    * array naming one predicate over its first file. */
+  def writePredicateDeleteManifest(root: String): Unit = {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val v = Versioned.latestVersion(root).get
+    val log = new java.io.File(root, "_graft_log")
+    val mapper = new ObjectMapper()
+    val node = mapper.readTree(new java.io.File(log, f"v$v%012d.json"))
+      .asInstanceOf[ObjectNode]
+    node.put("version", v + 1)
+    node.put("action", "mor-delete")
+    val pending = node.putArray("mor").addObject()
+    pending.put("pred", "(id = 2)")
+    pending.putArray("files").add(Versioned.files(root, v).head)
+    mapper.writeValue(new java.io.File(log, f"v${v + 1}%012d.json"), node)
   }
 }

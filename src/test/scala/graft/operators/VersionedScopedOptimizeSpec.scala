@@ -27,7 +27,7 @@ class VersionedScopedOptimizeSpec extends SparkSpec {
     }
     val before = Versioned.latestVersion(root).get
     val beforeFiles = Versioned.files(root, before)
-    val (entries0, _, _) = Versioned.aggMeta(root, before)
+    val (entries0, _) = Versioned.aggMeta(root, before)
     val p1Before = entries0.filter(_.stats("p")._2 == "1").map(_.path)
     val otherBefore = entries0.filterNot(_.stats("p")._2 == "1")
       .map(_.path).toSet
@@ -35,7 +35,7 @@ class VersionedScopedOptimizeSpec extends SparkSpec {
     val v = VersionedSql(spark, s"OPTIMIZE `$root` WHERE p = 1")
       .select("version").as[Long].head()
     assert(v === before + 1)
-    val (entries1, _, _) = Versioned.aggMeta(root, v)
+    val (entries1, _) = Versioned.aggMeta(root, v)
     val p1After = entries1.filter(_.stats("p")._2 == "1").map(_.path)
     assert(p1After.size === 1, s"p=1 must pack to one file: $p1After")
     assert(p1After.toSet.intersect(p1Before.toSet).isEmpty)
@@ -104,7 +104,7 @@ class VersionedScopedOptimizeSpec extends SparkSpec {
         "timestamp_seconds(1700000000 + id * 40000) FROM range(8)")
     }
     val before = Versioned.latestVersion(root).get
-    val (e0, _, _) = Versioned.aggMeta(root, before)
+    val (e0, _) = Versioned.aggMeta(root, before)
     val day0 = e0.map(_.stats("_pt_days_ts")._2).min
     val day0Files = e0.filter(_.stats("_pt_days_ts")._2 == day0)
     assert(day0Files.size === 3)
@@ -112,7 +112,7 @@ class VersionedScopedOptimizeSpec extends SparkSpec {
     val v = VersionedSql(spark, s"OPTIMIZE graftso.ns.ev WHERE " +
       "ts < timestamp'2023-11-15 00:00:00'")
       .select("version").as[Long].head()
-    val (e1, _, _) = Versioned.aggMeta(root, v)
+    val (e1, _) = Versioned.aggMeta(root, v)
     assert(e1.count(_.stats("_pt_days_ts")._2 == day0) === 1,
       "the first day must pack to one file")
     assert(spark.sql("SELECT count(*) FROM graftso.ns.ev")
@@ -134,7 +134,7 @@ class VersionedScopedOptimizeSpec extends SparkSpec {
         "FROM range(30)")
     }
     val before = Versioned.latestVersion(root).get
-    val (e0, _, _) = Versioned.aggMeta(root, before)
+    val (e0, _) = Versioned.aggMeta(root, before)
     // ≥3 (one per commit; unclustered inserts may fan out more)
     assert(e0.count(_.stats("_pt_truncate10_k")._2 == "10") >= 3)
     val outBefore = e0.filterNot(_.stats("_pt_truncate10_k")._2 == "10")
@@ -148,7 +148,7 @@ class VersionedScopedOptimizeSpec extends SparkSpec {
     val v = VersionedSql(spark,
       "OPTIMIZE graftsot.ns.tr WHERE k >= 10 AND k <= 19")
       .select("version").as[Long].head()
-    val (e1, _, _) = Versioned.aggMeta(root, v)
+    val (e1, _) = Versioned.aggMeta(root, v)
     assert(e1.count(_.stats("_pt_truncate10_k")._2 == "10") === 1,
       "the scoped width-window must pack to one file")
     assert(e1.filterNot(_.stats("_pt_truncate10_k")._2 == "10")

@@ -19,7 +19,7 @@ class VersionedSkipInheritSpec extends SparkSpec {
 
   /** (statsKeys, bloomKeys) of every live file at latest. */
   private def skipKeys(root: String): (Set[String], Set[String]) = {
-    val (entries, _, _) =
+    val (entries, _) =
       Versioned.aggMeta(root, Versioned.latestVersion(root).get)
     (entries.flatMap(_.stats.keys).toSet,
       entries.flatMap(_.blooms.keys).toSet)

@@ -59,12 +59,12 @@ class VersionedZOrderSpec extends SparkSpec {
     val root = freshRoot()
     Versioned.commit(spark, root, rows(0 until 2000).coalesce(2),
       statsCols = Seq("id", "y"))
-    Versioned.deleteDeferred(spark, root, col("id") < 100)
+    Versioned.deleteRows(spark, root, col("id") < 100)
     val v = Versioned.zorder(spark, root, Seq("id", "y"), nOut = 4)
     assert(Versioned.read(spark, root).count() === 1900)
     assert(Versioned.read(spark, root).agg(min("id")).as[Long].head() === 100L)
-    // the rewrite cleared the pending predicate: a copy-on-write verb
-    // that refuses under pending mor must now succeed
+    // the rewrite cleared the pending vectors: a copy-on-write verb
+    // that refuses under pending vectors must now succeed
     Versioned.delete(spark, root, col("id") === 100L)
     assert(Versioned.read(spark, root).count() === 1899)
     assert(Versioned.latestVersion(root).get === v + 1)

@@ -158,7 +158,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(v === 1L, "partitioned CTAS is still one commit")
     assert(Versioned.transformsOf(root).map(_.show) ===
       Seq("bucket(4, k)"))
-    val (entries, _, _) = Versioned.aggMeta(root, v)
+    val (entries, _) = Versioned.aggMeta(root, v)
     assert(entries.nonEmpty && entries.forall(e =>
       e.stats.get("_pt_bucket4_k").exists(s => s._2 == s._3)),
       "every staged CTAS file must be bucket-pure")
@@ -402,6 +402,76 @@ class GraftCatalogSpec extends SparkSpec {
     // a path-metacharacter identifier can never escape the warehouse
     intercept[Exception] {
       sql("CREATE TABLE graftc.guard.`..` (k INT)")
+    }
+  }
+
+  test("plain catalog reads of a clean and of a DV-pending table both " +
+      "plan BatchScan … ColumnarToRow") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graftc.one")
+    sql("CREATE TABLE graftc.one.t (id BIGINT, v DOUBLE)")
+    sql("INSERT INTO graftc.one.t VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
+    def plan(): String = {
+      val q = sql("SELECT id, v FROM graftc.one.t WHERE v > 0.5")
+      q.collect()
+      q.queryExecution.executedPlan.toString
+    }
+    for (state <- Seq("clean", "dv-pending")) {
+      if (state == "dv-pending")
+        Versioned.deleteRows(spark, s"$warehouse/one/t", col("id") === 2L)
+      val p = plan()
+      assert(p.contains("BatchScan") && p.contains("ColumnarToRow"),
+        s"$state catalog read must take the native vectorized scan:\n$p")
+    }
+    assert(sql("SELECT id FROM graftc.one.t").as[Long].collect().toSet ===
+      Set(1L, 3L))
+  }
+
+  test("a table declaring a `_file` data column reads it by name on the " +
+      "native scan, with no V1 scan node") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graftc.shadow")
+    sql("CREATE TABLE graftc.shadow.t (id BIGINT, _file STRING)")
+    sql("INSERT INTO graftc.shadow.t VALUES (1, 'a.csv'), (2, 'b.csv')")
+    val q = sql("SELECT id, _file FROM graftc.shadow.t")
+    assert(q.as[(Long, String)].collect().toSet ===
+      Set((1L, "a.csv"), (2L, "b.csv")))
+    val plan = q.queryExecution.executedPlan
+    assert(plan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.nonEmpty, s"expected the native BatchScan:\n$plan")
+    assert(plan.collect {
+      case r: org.apache.spark.sql.execution.RowDataSourceScanExec => r
+    }.isEmpty, s"no V1 scan may plan:\n$plan")
+    // the data value, not a file path, filters and projects
+    assert(sql("SELECT id FROM graftc.shadow.t WHERE _file = 'b.csv'")
+      .as[Long].collect().toSeq === Seq(2L))
+    // the shadowed name leaves the metadata face; `_pos` stays
+    val t = new GraftCatalog
+    t.initialize("graftc", new org.apache.spark.sql.util
+      .CaseInsensitiveStringMap(java.util.Map.of("warehouse", warehouse)))
+    val meta = t.loadTable(org.apache.spark.sql.connector.catalog
+        .Identifier.of(Array("shadow"), "t"))
+      .asInstanceOf[GraftTable].metadataColumns().map(_.name()).toSeq
+    assert(meta === Seq("_pos"))
+  }
+
+  test("catalog calls resolve a session with none active or default") {
+    sql("CREATE NAMESPACE IF NOT EXISTS graftc.sess")
+    sql("CREATE TABLE graftc.sess.t (id BIGINT)")
+    sql("INSERT INTO graftc.sess.t VALUES (1)")
+    val cat = new GraftCatalog
+    cat.initialize("graftc", new org.apache.spark.sql.util
+      .CaseInsensitiveStringMap(java.util.Map.of("warehouse", warehouse)))
+    val before = (org.apache.spark.sql.SparkSession.getActiveSession,
+      org.apache.spark.sql.SparkSession.getDefaultSession)
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val t = cat.loadTable(org.apache.spark.sql.connector.catalog
+        .Identifier.of(Array("sess"), "t"))
+      assert(t.schema().fieldNames.toSeq === Seq("id"))
+    } finally {
+      before._1.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
+      before._2.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
     }
   }
 }

@@ -28,7 +28,7 @@ class GraftHiddenPartitionSpec extends SparkSpec {
   /** Head-version file entries with their single-valued stats for a
     * partition column. */
   private def headTuples(root: String, col: String): Seq[String] = {
-    val (entries, _, _) = Versioned.aggMeta(root,
+    val (entries, _) = Versioned.aggMeta(root,
       Versioned.versions(root).last)
     entries.map { e =>
       val (_, lo, hi) = e.stats.getOrElse(col,
@@ -146,7 +146,7 @@ class GraftHiddenPartitionSpec extends SparkSpec {
     assert(kept.size < all.size,
       s"bucket pruning must drop other buckets: kept ${kept.size}/${all.size}")
     val bucket5 = spark.sql("SELECT pmod(hash(5L), 4)").as[Int].head()
-    val (entries, _, _) = Versioned.aggMeta(root, v)
+    val (entries, _) = Versioned.aggMeta(root, v)
     val expected = entries.filter(e =>
       e.stats("_pt_bucket4_k")._2.toInt == bucket5).map(_.path).toSet
     assert(kept.toSet === expected)
@@ -309,7 +309,7 @@ class GraftHiddenPartitionSpec extends SparkSpec {
     assert(tuples === Set(-16L, -8L, 0L, 8L, 16L, 24L, 32L, 40L))
     val v = Versioned.versions(root).last
     val all = Versioned.files(root, v)
-    val (entries, _, _) = Versioned.aggMeta(root, v)
+    val (entries, _) = Versioned.aggMeta(root, v)
     def filesOf(ts: Set[Long]) = entries.filter(e =>
       ts(e.stats("_pt_truncate8_k")._2.toLong)).map(_.path).toSet
     // point: k = 13 → hidden = 8
@@ -356,7 +356,7 @@ class GraftHiddenPartitionSpec extends SparkSpec {
     // equality: s = 'ba3' → prefix 'ba'
     val keptEq = Versioned.candidateFilesForBounds(root, v,
       Seq(Versioned.ColumnBound("s", Some("ba3"), Some("ba3")))).toSet
-    val (entries, _, _) = Versioned.aggMeta(root, v)
+    val (entries, _) = Versioned.aggMeta(root, v)
     val baFiles = entries.filter(
       _.stats("_pt_truncate2_s")._2 == "ba").map(_.path).toSet
     assert(keptEq === baFiles && keptEq.size < all.size)

@@ -282,7 +282,7 @@ class GraftRowLevelSpec extends SparkSpec {
     // a plain read with no pending state MAY project _file
     assert(sql("SELECT _file, id FROM graftr.rl.morg").count() === 3L)
     Versioned.deleteRows(spark, root, col("id") === 2L)
-    // the bridge read honors the vector; the DV-AWARE native scan
+    // the DV-AWARE native scan honors the vector on plain reads and
     // serves the provenance projection with the deleted row filtered
     assert(sql("SELECT id FROM graftr.rl.morg").as[Long]
       .collect().toSet === Set(1L, 3L))
@@ -294,14 +294,14 @@ class GraftRowLevelSpec extends SparkSpec {
     assert(sql("SELECT id, v FROM graftr.rl.morg ORDER BY id")
       .as[(Long, Double)].collect().toSeq ===
       Seq((1L, 0.0), (3L, 0.0)))
-    // PREDICATE merge-on-read deletes have no native algebra: both the
-    // provenance read and bare-SQL DML refuse loudly until compact
+    // a manifest in the retired PREDICATE delete form is refused
+    // loudly by both a plain read and bare-SQL DML — never read past
     sql("CREATE TABLE graftr.rl.morp (id BIGINT, v DOUBLE)")
     val rootP = s"$warehouse/rl/morp"
     sql("INSERT INTO graftr.rl.morp VALUES (1, 1.0), (2, 2.0)")
-    Versioned.deleteDeferred(spark, rootP, col("id") === 2L)
+    graft.operators.VersionedDvSpec.writePredicateDeleteManifest(rootP)
     val e = intercept[Exception] {
-      sql("SELECT _file, id FROM graftr.rl.morp").collect()
+      sql("SELECT id FROM graftr.rl.morp").collect()
     }
     val msgs = Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).map(m => Option(m.getMessage).getOrElse(""))

@@ -53,7 +53,7 @@ class GraftSpecEvolutionSpec extends SparkSpec {
       .createOrReplaceTempView("pse_new")
     sql("INSERT INTO graftpse.ns.ev SELECT * FROM pse_new")
     val v = Versioned.versions(root).last
-    val (entries, _, _) = Versioned.aggMeta(root, v)
+    val (entries, _) = Versioned.aggMeta(root, v)
     val oldGen = entries.filter(e => preFiles(e.path))
     val newGen = entries.filterNot(e => preFiles(e.path))
     assert(oldGen.nonEmpty && newGen.nonEmpty)
@@ -133,7 +133,7 @@ class GraftSpecEvolutionSpec extends SparkSpec {
       // the legacy transform retires in that commit
       VersionedSql(spark, "OPTIMIZE graftpse.ns.fact INTO 8 FILES")
       val v = Versioned.versions(factRoot).last
-      val (entries, _, _) = Versioned.aggMeta(factRoot, v)
+      val (entries, _) = Versioned.aggMeta(factRoot, v)
       assert(entries.forall(_.stats.contains("_pt_bucket8_k")),
         "OPTIMIZE must migrate every file to the current spec")
       assert(Versioned.legacyTransformsOf(factRoot, Some(v)).isEmpty,
@@ -318,7 +318,7 @@ class GraftSpecEvolutionSpec extends SparkSpec {
     assert(got === expected)
     // post-overwrite: replaced tuples hold ONLY current-spec files
     val v = Versioned.versions(root).last
-    val (entries, _, _) = Versioned.aggMeta(root, v)
+    val (entries, _) = Versioned.aggMeta(root, v)
     assert(entries.forall(_.stats.contains("_pt_bucket4_k")),
       "the rescue rewrite must migrate old-generation rows")
   }
@@ -345,7 +345,7 @@ class GraftSpecEvolutionSpec extends SparkSpec {
     val v = Versioned.versions(root).last
     assert(Versioned.pendingDvEntries(root, v).nonEmpty,
       "the delta update must leave deletion vectors pending")
-    val (entries, _, _) = Versioned.aggMeta(root, v)
+    val (entries, _) = Versioned.aggMeta(root, v)
     val postimages = entries.filterNot(e => preFiles(e.path))
     assert(postimages.nonEmpty && postimages.forall(
       _.stats.contains("_pt_bucket4_k")),

@@ -196,7 +196,7 @@ class GraftWriteDistributionSpec extends SparkSpec {
       try sql("INSERT OVERWRITE graftw.ns.tfs SELECT * FROM wdist_tfs")
       finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     } finally spark.conf.unset("spark.graft.write.targetFileSize")
-    val (entries, _, _) = Versioned.aggMeta(root,
+    val (entries, _) = Versioned.aggMeta(root,
       Versioned.versions(root).last)
     val byP = entries.groupBy(_.stats("p")._2)
     assert(byP("0").size > 3,
