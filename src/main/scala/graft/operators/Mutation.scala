@@ -488,7 +488,7 @@ object Mutation {
   /** Parquet "overwrite self-read" safely: stage to a temp dir, swap.
     * (Delta/Iceberg make this a transactional no-op; plain parquet needs
     * the staging hop because the plan still reads the target.) */
-  private def overwriteAtomic(spark: SparkSession, targetPath: String,
+  private[graft] def overwriteAtomic(spark: SparkSession, targetPath: String,
       df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
     val tmp = targetPath + ".staging"
     val w = df.write.mode("overwrite")

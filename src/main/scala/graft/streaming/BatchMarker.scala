@@ -1,14 +1,15 @@
 package graft.streaming
 
 /** Last-applied-batch marker for foreachBatch replay guards, written
-  * ATOMICALLY (tmp + rename) so a crash mid-write can't leave a
-  * truncated marker that wedges every subsequent restart.
+  * ATOMICALLY (tmp + atomic rename over the old marker) so a crash
+  * mid-write leaves either the old or the new id, never a truncated or
+  * missing marker.
   *
   * Two read policies, matched to the sink's write discipline:
   *  - `lenient` (idempotent per-batch writes — overwrite-by-batchId
   *    dirs, tagged segments): an unreadable marker degrades to "replay
   *    the in-flight batch", which the idempotent write absorbs.
-  *  - strict (non-idempotent folds, e.g. aggregate MV MERGE): an
+  *  - strict (non-idempotent folds, e.g. the CDC SCD2 history): an
   *    unreadable marker is an ERROR — replaying a possibly-applied
   *    batch would double-fold, so the operator must stop and say so
   *    rather than corrupt the target.
@@ -34,9 +35,9 @@ object BatchMarker {
     val tmp = new java.io.File(path + ".tmp")
     val w = new java.io.PrintWriter(tmp)
     try w.print(batchId) finally w.close()
-    val fin = new java.io.File(path)
-    fin.delete()
-    if (!tmp.renameTo(fin))
-      throw new java.io.IOException(s"could not publish batch marker $path")
+    // POSIX rename replaces the target atomically: no window in which
+    // the marker is gone and reads back as "nothing applied".
+    java.nio.file.Files.move(tmp.toPath, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 }

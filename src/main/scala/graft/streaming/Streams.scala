@@ -206,54 +206,42 @@ object Streams {
         .dropDuplicates(Medallion.naturalKey))
 
   /** ST6 hard case (SURVEY §7.4(7)): a continuously-maintained AGGREGATE
-    * MV. Row-level MVs are stateless appends, but an aggregate MV needs
-    * update semantics at the sink — implemented as foreachBatch + keyed
-    * MERGE: each micro-batch re-aggregates its rows and upserts the
-    * affected groups, so the target table converges to the full-history
-    * aggregate without ever rescanning it. Requires a re-aggregable
-    * measure set (counts/sums — the additive aggregates the reference's
-    * marts use). */
-  def aggregateMv(events: DataFrame, targetDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // foreachBatch is at-least-once: a batch replayed after a failure
-        // between the MERGE and the offset commit would be folded in twice.
-        // Record the last applied batchId next to the target and skip
-        // replays (valid as long as target and checkpoint live and die
-        // together, which mergeUpsert's staging swap preserves). STRICT
-        // marker policy: the MERGE fold is not idempotent, so an
-        // unreadable marker must stop the query, not guess.
-        val marker = targetDir + ".lastbatch"
-        if (batchId > BatchMarker.lastApplied(marker, lenient = false)) {
-          val spark = batch.sparkSession
-          val delta = batch
-            .groupBy(to_date(col("ts")).as("event_date"), col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-                .cast("double").as("total_value"))
-          val existing = graft.operators.Mutation.readIfExists(spark, targetDir)
-          // Touch ONLY the groups this batch affects: semi-join the current
-          // MV down to the delta's keys (partition-pruned on partitioned
-          // storage), fold the delta in, and upsert those groups.
-          val affected = existing match {
-            case None => delta
-            case Some(cur) =>
-              val keys = delta.select("event_date", "event_type").distinct()
-              cur.join(keys, Seq("event_date", "event_type"), "left_semi")
-                .unionByName(delta)
-                .groupBy("event_date", "event_type")
-                .agg(sum("n").as("n"),
-                  sum(col("total_value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-                    .cast("double").as("total_value"))
-          }
-          graft.operators.Mutation.mergeUpsert(
-            spark, targetDir, affected, Seq("event_date", "event_type"))
-          BatchMarker.commit(marker, batchId)
-        }
+    * MV, as a stateful streaming aggregate in complete output mode. The
+    * running per-group fold (row count, DECIMAL(18,2) sum) lives in
+    * Spark's checkpointed state store, O(groups) like the MV itself, so a
+    * micro-batch folds in only its new rows and never reads the MV back.
+    * foreachBatch swaps the complete result, also O(groups), into
+    * `targetDir` through the staged overwrite.
+    *
+    * The sink is idempotent: a replayed batch N re-emits the complete
+    * result of the state as of N, so a replay cannot fold a batch twice,
+    * and a crash between the swap's two renames is repaired by the replay
+    * rewriting the MV from state. Target and checkpoint live and die
+    * together; an MV is rebuilt from its source by deleting both.
+    *
+    * Checkpoint break: an MV written by the earlier foreachBatch fold
+    * has a `<targetDir>.lastbatch` marker and no aggregate state in its
+    * checkpoint. It is refused, naming what to delete, rather than
+    * restarted from empty state. */
+  def aggregateMv(events: DataFrame, targetDir: String, checkpointDir: String): StreamingQuery = {
+    val marker = targetDir + ".lastbatch"
+    if (new java.io.File(marker).exists())
+      throw new IllegalStateException(
+        s"aggregate MV $targetDir was built by the batch-folding MV, whose checkpoint " +
+          s"$checkpointDir holds no aggregate state; delete $checkpointDir, $targetDir " +
+          s"and $marker to rebuild the MV from its source")
+    events
+      .groupBy(to_date(col("ts")).as("event_date"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value").cast(DecimalType(18, 2))).as("total_value"))
+      .writeStream.outputMode("complete")
+      .foreachBatch { (result: DataFrame, _: Long) =>
+        graft.operators.Mutation.overwriteAtomic(result.sparkSession, targetDir,
+          result.withColumn("total_value", col("total_value").cast("double")))
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 
   /** Exactly-once streaming sink onto a [[graft.operators.Versioned]]
     * table. Unlike the marker-file guard above, the replay guard rides
