@@ -50,9 +50,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    unretried. This is Delta's log-protocol commit + retry loop,
   *    minus the cloud-store LWT shims.
   *  - **Stats pruning before the scan**: [[readPruned]] drops files
-  *    whose manifest min/max can't overlap the predicate — the
-  *    manifest-level half of the footer-pruning [[Mutation]] does, now
-  *    without even opening the files.
+  *    whose manifest min/max can't overlap the predicate, without
+  *    opening the files.
   *
   * Readers of version N see an immutable file set; writers never mutate
   * published files (append/overwrite/compact all write NEW batch dirs).
@@ -2727,14 +2726,12 @@ object Versioned {
 
   // ------------------------------------------------------------ merge
 
-  /** Copy-on-write MERGE (upsert by unique `key`) with the full
-    * lakehouse economics the plain-parquet [[Mutation]] variants can
-    * only approximate:
+  /** Copy-on-write MERGE (upsert by unique `key`, dbt incremental
+    * `unique_key` semantics, M1) with the full lakehouse economics:
     *
     *  - files whose manifest min/max for `key` cannot contain ANY
     *    update key are carried into the new version BY REFERENCE —
-    *    zero bytes rewritten, zero bytes copied (Mutation's dir-swap
-    *    must at least relink whole directories; a manifest just keeps
+    *    zero bytes rewritten, zero bytes copied (a manifest just keeps
     *    the old path). Files without recorded stats are conservatively
     *    rewritten.
     *  - touched files are anti-joined against the updates, unioned

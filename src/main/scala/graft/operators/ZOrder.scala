@@ -1,19 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton-curve) clustering for multi-column data skipping.
   *
-  * A single-key sort ([[Mutation.compact]] `clusterBy`) gives each data
-  * file a tight [min, max] range on ONE column — parquet footer stats
-  * then prune files for filters on that column, and nothing else. At
-  * 100 TB the second-most-common filter column matters just as much:
-  * interleaving the bits of several columns' normalized ranks into one
-  * sort key (the Morton/Z curve — the same trade Delta's `OPTIMIZE
-  * ZORDER BY` makes) gives every clustered column a PARTIAL range per
-  * file, so footer-stats pruning works on ANY of them, at the cost of
-  * none being perfectly tight.
+  * A single-key sort ([[Versioned.zorder]] on one column) gives each
+  * data file a tight [min, max] range on ONE column — the manifest's
+  * per-file stats then prune files for filters on that column, and
+  * nothing else. At 100 TB the second-most-common filter column matters
+  * just as much: interleaving the bits of several columns' normalized
+  * ranks into one sort key (the Morton/Z curve — the same trade Delta's
+  * `OPTIMIZE ZORDER BY` makes) gives every clustered column a PARTIAL
+  * range per file, so stats pruning works on ANY of them, at the cost
+  * of none being perfectly tight. [[Versioned.zorder]] is the verb that
+  * rewrites a table in this layout.
   *
   * All layout math is plain column expressions (scale to a bits-wide
   * integer rank against broadcast per-column [min, max], then a fixed
@@ -73,48 +74,5 @@ object ZOrder {
       .repartitionByRange(nOut, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-  }
-
-  /** OPTIMIZE ... ZORDER BY: [[Mutation.compactWith]] using the Morton
-    * layout — bin-packs small files to `targetBytes` AND leaves every
-    * clustered column footer-stats-prunable. */
-  def compact(spark: SparkSession, path: String, cols: Seq[String],
-      targetBytes: Long = 128L * 1024 * 1024, bits: Int = 16): Boolean =
-    Mutation.compactWith(spark, path, targetBytes,
-      (df, nOut) => cluster(df, cols, nOut, bits))
-
-  /** Per-file [min, max] footer statistics for an INT64 column —
-    * metadata-only (row groups never read). The measurement side of
-    * Z-ordering: a filter on `[lo, hi]` must scan exactly the files
-    * whose range overlaps it. */
-  def fileRanges(spark: SparkSession, path: String,
-      column: String): Seq[(String, Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    new java.io.File(path).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).toSeq
-      .map { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.getPath), conf))
-        try {
-          val ranges = reader.getFooter.getBlocks.asScala.flatMap { block =>
-            block.getColumns.asScala
-              .find(_.getPath.toDotString == column)
-              .flatMap { cc =>
-                val st = cc.getStatistics
-                if (st == null || !st.hasNonNullValue) None
-                else (st.genericGetMin, st.genericGetMax) match {
-                  case (mn: java.lang.Long, mx: java.lang.Long) =>
-                    Some((mn.longValue(), mx.longValue()))
-                  case _ => None
-                }
-              }
-          }
-          val mn = if (ranges.isEmpty) Long.MinValue else ranges.map(_._1).min
-          val mx = if (ranges.isEmpty) Long.MaxValue else ranges.map(_._2).max
-          (f.getName, mn, mx)
-        } finally reader.close()
-      }
   }
 }

@@ -14,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * compose into ONE optimized plan, the Spark-native analog of dbt views);
   * table → parquet write + re-read (cuts lineage, like a dbt table);
   * external → parquet write at a caller-visible path, still in the DAG.
-  * Incremental/MERGE semantics live in operators.Mutation.
+  * Incremental/MERGE semantics live in operators.Versioned
+  * (mergeUpsert, merge, incrementalRun); SCD2 in operators.Scd2.
   */
 object ModelGraph {
 

@@ -202,22 +202,24 @@ object ExtraQueries {
     // too, and each SCD2 build is two real write pipelines — build once
     // per JVM, reuse the materialized history afterwards.
     val dir = scd2HistoryDir.getOrElseUpdate(d, {
-      import graft.operators.Mutation
+      import graft.operators.{Scd2, Versioned}
       val path = java.nio.file.Files
         .createTempDirectory("graft-scd2").toString + "/hist"
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
       val t1 = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
       val cols = Seq("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
       val base = t(s, d, "customer").select(cols.map(col): _*)
-      Mutation.scd2Apply(s, path, base, Seq("c_custkey"), cols.tail, t0)
+      Versioned.commit(s, path,
+        Scd2.scd2Apply(None, base, Seq("c_custkey"), cols.tail, t0))
       val snap2 = base.filter(col("c_custkey") % 97 =!= 0)
         .withColumn("c_acctbal",
           when(col("c_custkey") % 10 === 0, col("c_acctbal") + 100)
             .otherwise(col("c_acctbal")))
-      Mutation.scd2Apply(s, path, snap2, Seq("c_custkey"), cols.tail, t1)
+      Versioned.commit(s, path, Scd2.scd2Apply(Some(Versioned.read(s, path)),
+        snap2, Seq("c_custkey"), cols.tail, t1), mode = "overwrite")
       path
     })
-    s.read.parquet(dir)
+    graft.operators.Versioned.read(s, dir)
       .select(col("c_custkey"), col("c_acctbal").cast("double").as("acctbal"),
         col("valid_from"), col("valid_to"))
       .orderBy("c_custkey", "valid_from")

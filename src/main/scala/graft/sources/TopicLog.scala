@@ -44,8 +44,8 @@ object TopicLog {
     * `tag` makes the append IDEMPOTENT per tag (the transactional-
     * producer analog): segment names carry the tag, and a partition
     * that already has a segment for this tag is skipped — so a sink
-    * replaying a micro-batch after a crash between partial segment
-    * publishes and the marker commit writes each partition's segment
+    * replaying a micro-batch after a crash, between partial segment
+    * publishes or after the last one, writes each partition's segment
     * EXACTLY once (the batch content and ordering are deterministic,
     * so the re-derived segment is identical).
     *
@@ -120,24 +120,19 @@ object TopicLog {
     * topic-to-topic pipelines (S11) then run entirely through the
     * connector: `readStream.format("graft-topic")` on the source
     * topic, transforms, [[sink]] on the destination. foreachBatch is
-    * at-least-once; exactly-once comes from TWO layers: the batchId
-    * marker (atomic tmp+rename, lenient — see below) fast-path-skips
-    * completed batches, and the append itself is tagged with the
-    * batchId so a replay after a crash MID-append skips exactly the
-    * partitions whose segments already published and writes the rest —
-    * no duplicate and no lost records in the window between segment
-    * publishes and the marker commit. The batch must carry
+    * at-least-once; exactly-once comes from the append being tagged
+    * with the batchId: a replay, after a crash mid-append or after one,
+    * skips exactly the partitions whose segments for that tag already
+    * published and writes the rest — no duplicate and no lost records.
+    * A `<dir>.lastbatch` marker left by earlier versions of this sink is
+    * harmless, since nothing reads it. The batch must carry
     * (key, value, ts) columns — the producer schema. */
   def sink(df: org.apache.spark.sql.DataFrame, dir: String, nPartitions: Int,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = dir + ".lastbatch"
-        if (batchId > graft.streaming.BatchMarker.lastApplied(marker, lenient = true)) {
-          append(batch.sparkSession, batch, dir, nPartitions,
-            tag = Some(batchId.toString))
-          graft.streaming.BatchMarker.commit(marker, batchId)
-        }
+        append(batch.sparkSession, batch, dir, nPartitions,
+          tag = Some(batchId.toString))
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.Medallion
+import graft.operators.{Medallion, Versioned}
 
 /** Structured Streaming surface (SURVEY §2.9). The reference's Kafka
   * topics are modeled as file-stream sources here (no Kafka broker or
@@ -17,7 +17,10 @@ import graft.operators.Medallion
   * Semantics carried over 1:1 from the reference:
   *  - ST1 event-time watermark (10 s late tolerance)
   *  - ST2 bounded backfill via Trigger.AvailableNow
-  *  - ST4 exactly-once = checkpointed source offsets + idempotent sink
+  *  - ST4 exactly-once = checkpointed source offsets + idempotent sink;
+  *    a sink whose write is not idempotent by itself commits through
+  *    `Versioned.commitIfNew`, whose (appId, batchId) replay guard
+  *    publishes in the same atomic manifest link as the batch's data
   *  - ST5 streaming dedup: withWatermark + dropDuplicates(naturalKey)
   *  - ST7 tumbling-window rollup with append output
   *  - ST8 DLQ split via foreachBatch dual-write
@@ -96,99 +99,117 @@ object Streams {
     * micro-batch of parsed Debezium envelopes collapses to its per-key
     * delta (last image per key by ts_ms; last-op-delete keys become
     * closes) and folds into the history via
-    * [[graft.operators.Mutation.scd2ApplyChanges]] — the CDC-fed SCD2
+    * [[graft.operators.Scd2.scd2ApplyChanges]] — the CDC-fed SCD2
     * that never needs the full dimension snapshot a 100 TB table can't
     * afford per batch. batchTs derives from the batch's max ts_ms, so
-    * restarts reproduce identical valid_from/scd_id values; a STRICT
-    * batch marker guards foreachBatch replays (the history fold is not
-    * idempotent). Spec: the streamed history is byte-identical to
-    * feeding the same batches' FULL snapshots through scd2Apply.
+    * restarts reproduce identical valid_from/scd_id values.
+    *
+    * `targetDir` is a [[graft.operators.Versioned]] table, one version
+    * per non-empty micro-batch. The history fold is not idempotent, so
+    * each fold commits as an overwrite through `commitIfNew`: a replayed
+    * batch finds its batchId in the manifest and folds nothing, with no
+    * window between the data landing and the guard. One stream writes a
+    * target. Spec: the streamed history is byte-identical to feeding the
+    * same batches' FULL snapshots through scd2Apply.
     */
   def cdcScd2Stream(envelopes: DataFrame, key: Seq[String],
       checkCols: Seq[String], targetDir: String,
-      checkpointDir: String, seqCol: Option[String] = None): StreamingQuery =
+      checkpointDir: String, seqCol: Option[String] = None): StreamingQuery = {
+    refuseStaleTarget(targetDir, checkpointDir, versioned = true)
     envelopes.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = targetDir + ".lastbatch"
-        if (batchId > BatchMarker.lastApplied(marker, lenient = false)) {
-          val spark = batch.sparkSession
-          import org.apache.spark.sql.expressions.Window
-          // Last envelope per key in this batch. The authoritative order
-          // within equal ts_ms is `seqCol` (wire it to the envelope's
-          // LSN/pos — Debezium stamps every op of a transaction with one
-          // commit ts_ms, so ONLY a sequence can order intra-transaction
-          // ops). Without a sequence the residual tie rule is documented
-          // and conservative: the DELETE wins (an updated-then-deleted
-          // row must end deleted; the cost is that a same-ts
-          // delete-then-reinsert also resolves to deleted), and u/u ties
-          // break on the greatest after-image for run-determinism.
-          val keyed = batch.withColumn("_k",
-            when(col("after").isNotNull,
-              struct(key.map(k => col(s"after.$k")): _*))
-              .otherwise(struct(key.map(k => col(s"before.$k")): _*)))
-          val order = Seq(col("ts_ms").desc) ++
-            seqCol.map(c => col(c).desc).toSeq ++
-            Seq((col("op") === "d").desc, col("op").desc, col("after").desc)
-          val w = Window.partitionBy("_k").orderBy(order: _*)
-          val last = keyed.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1).persist()
-          try {
-            val upserts = last.filter(col("op") =!= "d").select(col("after.*"))
-            val deleteKeys = last.filter(col("op") === "d")
-              .select(key.map(k => col(s"before.$k").as(k)): _*)
-            val maxTs = last.agg(max("ts_ms")).head()
-            if (!maxTs.isNullAt(0)) {
-              val batchTs = new java.sql.Timestamp(maxTs.getLong(0))
-              graft.operators.Mutation.scd2ApplyChanges(spark, targetDir,
-                upserts, deleteKeys, key, checkCols, batchTs)
-            }
-            BatchMarker.commit(marker, batchId)
-          } finally { last.unpersist(); () }
-        }
+        val spark = batch.sparkSession
+        import org.apache.spark.sql.expressions.Window
+        // Last envelope per key in this batch. The authoritative order
+        // within equal ts_ms is `seqCol` (wire it to the envelope's
+        // LSN/pos — Debezium stamps every op of a transaction with one
+        // commit ts_ms, so ONLY a sequence can order intra-transaction
+        // ops). Without a sequence the residual tie rule is documented
+        // and conservative: the DELETE wins (an updated-then-deleted
+        // row must end deleted; the cost is that a same-ts
+        // delete-then-reinsert also resolves to deleted), and u/u ties
+        // break on the greatest after-image for run-determinism.
+        val keyed = batch.withColumn("_k",
+          when(col("after").isNotNull,
+            struct(key.map(k => col(s"after.$k")): _*))
+            .otherwise(struct(key.map(k => col(s"before.$k")): _*)))
+        val order = Seq(col("ts_ms").desc) ++
+          seqCol.map(c => col(c).desc).toSeq ++
+          Seq((col("op") === "d").desc, col("op").desc, col("after").desc)
+        val w = Window.partitionBy("_k").orderBy(order: _*)
+        val last = keyed.withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") === 1).persist()
+        try {
+          val upserts = last.filter(col("op") =!= "d").select(col("after.*"))
+          val deleteKeys = last.filter(col("op") === "d")
+            .select(key.map(k => col(s"before.$k").as(k)): _*)
+          val maxTs = last.agg(max("ts_ms")).head()
+          if (!maxTs.isNullAt(0)) {
+            val batchTs = new java.sql.Timestamp(maxTs.getLong(0))
+            val history = Versioned.latestVersion(targetDir)
+              .map(_ => Versioned.read(spark, targetDir))
+            Versioned.commitIfNew(spark, targetDir,
+              graft.operators.Scd2.scd2ApplyChanges(history, upserts,
+                deleteKeys, key, checkCols, batchTs),
+              "cdcScd2Stream", batchId, mode = "overwrite")
+          }
+          ()
+        } finally { last.unpersist(); () }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 
   /** Incremental PQ encoding: new embedding rows stream in and encode
     * against a FROZEN codebook (trained once on the initial corpus —
     * retraining per batch would make old and new codes incomparable).
-    * Pure broadcast-join per micro-batch, append sink guarded by a
-    * strict batch marker — foreachBatch is at-least-once, and a
-    * replayed append would duplicate code rows. `m`/`dims` MUST match
-    * the geometry the codebook was trained with (a mismatch would
-    * silently join partial subspaces). Spec: drained stream codes
-    * ≡ batch [[graft.operators.Similarity.pqEncode]] on the same rows. */
+    * Pure broadcast-join per micro-batch, appended to the
+    * [[graft.operators.Versioned]] table `targetDir` through
+    * `commitIfNew` — foreachBatch is at-least-once, and the in-manifest
+    * (appId, batchId) guard turns a replayed append into a no-op
+    * instead of duplicate code rows. One stream writes a target.
+    * `m`/`dims` MUST match the geometry the codebook was trained with
+    * (a mismatch would silently join partial subspaces). Spec: drained
+    * stream codes ≡ batch [[graft.operators.Similarity.pqEncode]] on
+    * the same rows. */
   def pqEncodeStream(vectors: DataFrame, codebook: DataFrame,
       targetDir: String, checkpointDir: String,
-      m: Int = 8, dims: Int = 64): StreamingQuery =
+      m: Int = 8, dims: Int = 64): StreamingQuery = {
+    refuseStaleTarget(targetDir, checkpointDir, versioned = true)
     vectors.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = targetDir + ".lastbatch"
-        if (batchId > BatchMarker.lastApplied(marker, lenient = false)) {
-          graft.operators.Similarity.pqEncode(batch, codebook, m, dims)
-            .write.mode("append").parquet(targetDir)
-          BatchMarker.commit(marker, batchId)
-        }
+        Versioned.commitIfNew(batch.sparkSession, targetDir,
+          graft.operators.Similarity.pqEncode(batch, codebook, m, dims),
+          "pqEncodeStream", batchId)
+        ()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 
   /** ST8 DLQ split: per micro-batch, valid rows append to the main sink
-    * and invalid rows to the dead-letter sink — one pass, two writes,
-    * transactionally scoped to the batch (foreachBatch). */
+    * and invalid rows to the dead-letter sink — one pass, two writes.
+    * Both sinks are [[graft.operators.Versioned]] tables, each appended
+    * exactly once per batch through its own in-manifest (appId, batchId)
+    * guard. The two commits are not one transaction: a crash between
+    * them replays the batch, the committed sink recognizes its batchId
+    * and no-ops, and the other commits. One stream writes the pair. */
   def withDlq(events: DataFrame, validDir: String, dlqDir: String,
       checkpointDir: String): StreamingQuery = {
+    Seq(validDir, dlqDir).foreach(refuseStaleTarget(_, checkpointDir, versioned = true))
     val isValid = col("ts").isNotNull && col("user_id").isNotNull && col("value") >= 0
     events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spark = batch.sparkSession
         val marked = batch.withColumn("_valid", isValid).persist()
         try {
-          marked.filter(col("_valid")).drop("_valid")
-            .write.mode("append").parquet(validDir)
-          marked.filter(!col("_valid")).drop("_valid")
-            .write.mode("append").parquet(dlqDir)
+          Versioned.commitIfNew(spark, validDir,
+            marked.filter(col("_valid")).drop("_valid"), "withDlq:valid", batchId)
+          Versioned.commitIfNew(spark, dlqDir,
+            marked.filter(!col("_valid")).drop("_valid"), "withDlq:dlq", batchId)
+          ()
         } finally { marked.unpersist(); () }
       }
       .option("checkpointLocation", checkpointDir)
@@ -211,7 +232,9 @@ object Streams {
     * Spark's checkpointed state store, O(groups) like the MV itself, so a
     * micro-batch folds in only its new rows and never reads the MV back.
     * foreachBatch swaps the complete result, also O(groups), into
-    * `targetDir` through the staged overwrite.
+    * `targetDir` through a staged directory swap ([[swapInto]]). The MV
+    * stays a plain parquet directory, not a `Versioned` table: readers
+    * outside the engine read its parquet files directly.
     *
     * The sink is idempotent: a replayed batch N re-emits the complete
     * result of the state as of N, so a replay cannot fold a batch twice,
@@ -224,18 +247,13 @@ object Streams {
     * checkpoint. It is refused, naming what to delete, rather than
     * restarted from empty state. */
   def aggregateMv(events: DataFrame, targetDir: String, checkpointDir: String): StreamingQuery = {
-    val marker = targetDir + ".lastbatch"
-    if (new java.io.File(marker).exists())
-      throw new IllegalStateException(
-        s"aggregate MV $targetDir was built by the batch-folding MV, whose checkpoint " +
-          s"$checkpointDir holds no aggregate state; delete $checkpointDir, $targetDir " +
-          s"and $marker to rebuild the MV from its source")
+    refuseStaleTarget(targetDir, checkpointDir, versioned = false)
     events
       .groupBy(to_date(col("ts")).as("event_date"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value").cast(DecimalType(18, 2))).as("total_value"))
       .writeStream.outputMode("complete")
       .foreachBatch { (result: DataFrame, _: Long) =>
-        graft.operators.Mutation.overwriteAtomic(result.sparkSession, targetDir,
+        swapInto(targetDir,
           result.withColumn("total_value", col("total_value").cast("double")))
       }
       .option("checkpointLocation", checkpointDir)
@@ -243,10 +261,61 @@ object Streams {
       .start()
   }
 
+  /** Replaces the parquet directory `targetPath` with `df`: stage to a
+    * sibling dir, then swap it in with two renames, so a reader never
+    * sees a half-written MV. A crash between the renames leaves the old
+    * data at `<targetPath>.old`; the batch's replay rewrites the MV. */
+  private def swapInto(targetPath: String, df: DataFrame): Unit = {
+    val tmp = targetPath + ".staging"
+    df.write.mode("overwrite").parquet(tmp)
+    val target = new java.io.File(targetPath)
+    if (target.exists()) {
+      val trash = new java.io.File(targetPath + ".old")
+      deleteRecursively(trash)
+      if (!target.renameTo(trash))
+        throw new java.io.IOException(s"could not stage out old $targetPath")
+    }
+    // Check the swap succeeded BEFORE deleting the .old backup — a failed
+    // rename with the backup already deleted would lose the table.
+    if (!new java.io.File(tmp).renameTo(target))
+      throw new java.io.IOException(
+        s"could not swap $tmp into place; previous data kept at $targetPath.old")
+    deleteRecursively(new java.io.File(targetPath + ".old"))
+  }
+
+  private def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
+    if (f.exists()) f.delete()
+  }
+
+  /** Refuses a target that an earlier form of its sink left, whose
+    * checkpoint does not hold what this sink expects: for a `versioned`
+    * sink, a target that holds files but no `Versioned` log (the
+    * plain-parquet sinks guarded by a `<targetDir>.lastbatch` marker;
+    * `commitIfNew` would publish past those files and hide them); for
+    * the aggregate MV, a `.lastbatch` marker (the batch-folding MV,
+    * whose checkpoint holds no aggregate state). The message names what
+    * to delete so the target rebuilds from its source. */
+  private def refuseStaleTarget(targetDir: String, checkpointDir: String,
+      versioned: Boolean): Unit = {
+    val marker = new java.io.File(targetDir + ".lastbatch")
+    val stale =
+      if (versioned)
+        Option(new java.io.File(targetDir).list()).exists(_.nonEmpty) &&
+          Versioned.latestVersion(targetDir).isEmpty
+      else marker.exists()
+    if (stale)
+      throw new IllegalStateException(
+        s"$targetDir was written by an earlier form of this sink, which its " +
+          s"checkpoint $checkpointDir does not match; delete $checkpointDir, $targetDir" +
+          (if (marker.exists()) s" and $marker" else "") +
+          " to rebuild it from its source")
+  }
+
   /** Exactly-once streaming sink onto a [[graft.operators.Versioned]]
-    * table. Unlike the marker-file guard above, the replay guard rides
-    * IN the table's manifest (`Versioned.commitIfNew`, Delta's
-    * `txnAppId`/`txnVersion` dedup): the batch's data files and its
+    * table. The replay guard rides IN the table's manifest
+    * (`Versioned.commitIfNew`, Delta's `txnAppId`/`txnVersion`
+    * dedup): the batch's data files and its
     * (appId, batchId) tag publish in ONE atomic hard-link, so there is
     * no crash window where data landed but the guard didn't (or vice
     * versa). A foreachBatch redelivery after checkpoint recovery
@@ -390,9 +459,10 @@ object Streams {
     * instead of appending a second copy: pairs can't duplicate and,
     * crucially, the accumulated shingle store can't double (duplicated
     * (id, n, s) rows would double `common` counts and corrupt every
-    * later batch's jaccard). The batchId marker (atomic tmp+rename,
-    * lenient policy — the writes are idempotent) is a fast-path skip,
-    * not the correctness mechanism. Per-batch caches are scoped and
+    * later batch's jaccard). No marker file is needed: a replay
+    * recomputes the batch and overwrites the same subdirs, and a
+    * `<stateDir>.lastbatch` left by earlier versions of this sink is
+    * harmless, since nothing reads it. Per-batch caches are scoped and
     * released (CacheScope). State reads from earlier batches exclude
     * the in-flight batch's own subdirs, so a replay recomputes against
     * exactly the pre-batch state.
@@ -404,47 +474,44 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import graft.operators.Dedup
         val spark = batch.sparkSession
-        val marker = stateDir + ".lastbatch"
-        if (batchId > BatchMarker.lastApplied(marker, lenient = true))
-          graft.CacheScope.withScope {
-            val bandsPath = s"$stateDir/bands"
-            val shinglePath = s"$stateDir/shingled"
-            // earlier batches' subdirs ONLY — never the in-flight
-            // batch's own (possibly partial, pre-crash) output
-            def readPrior(root: String): Option[DataFrame] = {
-              val dirs = Option(new java.io.File(root).listFiles()).toSeq.flatten
-                .filter(f => f.isDirectory && f.getName.startsWith("batch-"))
-                .filter(_.getName.stripPrefix("batch-").toLong < batchId)
-                .map(_.getPath)
-              if (dirs.isEmpty) None
-              else Some(spark.read.parquet(dirs: _*))
-            }
-            val newShingled = graft.CacheScope.persist(
-              Dedup.shingleSets(batch, idCol, textCol))
-            val newBands = graft.CacheScope.persist(Dedup.lshBuckets(
-              Dedup.withSignature(newShingled, numHashes),
-              idCol, bands, numHashes / bands))
-            val allBands = readPrior(bandsPath)
-              .map(_.unionByName(newBands)).getOrElse(newBands)
-            val cand = newBands
-              .select(col("band"), col("sig"), col(idCol).as("x"))
-              .join(allBands.select(col("band"), col("sig"), col(idCol).as("y")),
-                Seq("band", "sig"))
-              .filter(col("x") =!= col("y"))
-              .select(least(col("x"), col("y")).as("i"),
-                greatest(col("x"), col("y")).as("j"))
-              .distinct()
-            val allShingled = readPrior(shinglePath)
-              .map(_.unionByName(newShingled)).getOrElse(newShingled)
-            Dedup.jaccardFor(cand, allShingled, idCol)
-              .filter(col("jaccard") >= threshold)
-              .write.mode("overwrite").parquet(s"$pairsDir/batch-$batchId")
-            newBands.write.mode("overwrite")
-              .parquet(s"$bandsPath/batch-$batchId")
-            newShingled.write.mode("overwrite")
-              .parquet(s"$shinglePath/batch-$batchId")
-            BatchMarker.commit(marker, batchId)
+        graft.CacheScope.withScope {
+          val bandsPath = s"$stateDir/bands"
+          val shinglePath = s"$stateDir/shingled"
+          // earlier batches' subdirs ONLY — never the in-flight
+          // batch's own (possibly partial, pre-crash) output
+          def readPrior(root: String): Option[DataFrame] = {
+            val dirs = Option(new java.io.File(root).listFiles()).toSeq.flatten
+              .filter(f => f.isDirectory && f.getName.startsWith("batch-"))
+              .filter(_.getName.stripPrefix("batch-").toLong < batchId)
+              .map(_.getPath)
+            if (dirs.isEmpty) None
+            else Some(spark.read.parquet(dirs: _*))
           }
+          val newShingled = graft.CacheScope.persist(
+            Dedup.shingleSets(batch, idCol, textCol))
+          val newBands = graft.CacheScope.persist(Dedup.lshBuckets(
+            Dedup.withSignature(newShingled, numHashes),
+            idCol, bands, numHashes / bands))
+          val allBands = readPrior(bandsPath)
+            .map(_.unionByName(newBands)).getOrElse(newBands)
+          val cand = newBands
+            .select(col("band"), col("sig"), col(idCol).as("x"))
+            .join(allBands.select(col("band"), col("sig"), col(idCol).as("y")),
+              Seq("band", "sig"))
+            .filter(col("x") =!= col("y"))
+            .select(least(col("x"), col("y")).as("i"),
+              greatest(col("x"), col("y")).as("j"))
+            .distinct()
+          val allShingled = readPrior(shinglePath)
+            .map(_.unionByName(newShingled)).getOrElse(newShingled)
+          Dedup.jaccardFor(cand, allShingled, idCol)
+            .filter(col("jaccard") >= threshold)
+            .write.mode("overwrite").parquet(s"$pairsDir/batch-$batchId")
+          newBands.write.mode("overwrite")
+            .parquet(s"$bandsPath/batch-$batchId")
+          newShingled.write.mode("overwrite")
+            .parquet(s"$shinglePath/batch-$batchId")
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

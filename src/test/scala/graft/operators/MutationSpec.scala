@@ -2,62 +2,57 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** MERGE / incremental / SCD2 semantics + the reference's idempotency
-  * invariant (validate.py: 3 consecutive runs ⇒ identical counts). */
+/** Batch mutation semantics (SURVEY §2.10) on the Versioned table
+  * format: M1 MERGE upsert, M2 SCD2 folds, M3 full refresh vs
+  * incremental — and the reference's idempotency invariant
+  * (validate.py: 3 consecutive runs ⇒ identical counts). */
 class MutationSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
     Files.createTempDirectory("graft-mut").resolve("t").toString
 
+  /** Commits the fold of the table's current history (None before the
+    * first version) as an overwrite. */
+  private def fold(root: String)(f: Option[DataFrame] => DataFrame): Unit =
+    Versioned.commit(spark, root,
+      f(Versioned.latestVersion(root).map(_ => Versioned.read(spark, root))),
+      mode = "overwrite")
+
   test("mergeUpsert inserts, updates on key collision, and is idempotent") {
     val path = tmp()
-    Mutation.mergeUpsert(spark, path,
-      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "v"), Seq("id"))
-    Mutation.mergeUpsert(spark, path,
-      Seq((2L, "b2", 25.0), (3L, "c", 30.0)).toDF("id", "name", "v"), Seq("id"))
-    assert(spark.read.parquet(path).count() === 3)
-    val row2 = spark.read.parquet(path).filter($"id" === 2).head()
+    Versioned.commit(spark, path,
+      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "v"))
+    Versioned.mergeUpsert(spark, path,
+      Seq((2L, "b2", 25.0), (3L, "c", 30.0)).toDF("id", "name", "v"), "id")
+    assert(Versioned.read(spark, path).count() === 3)
+    val row2 = Versioned.read(spark, path).filter($"id" === 2).head()
     assert(row2.getAs[String]("name") === "b2")
     // Idempotency: replay the same batch 3 times, count stays 3 (M1).
     (1 to 3).foreach { _ =>
-      Mutation.mergeUpsert(spark, path,
-        Seq((2L, "b2", 25.0), (3L, "c", 30.0)).toDF("id", "name", "v"), Seq("id"))
+      Versioned.mergeUpsert(spark, path,
+        Seq((2L, "b2", 25.0), (3L, "c", 30.0)).toDF("id", "name", "v"), "id")
     }
-    assert(spark.read.parquet(path).count() === 3)
-  }
-
-  test("incrementalInsert only processes rows past the high watermark") {
-    val path = tmp()
-    def batch(rows: (Long, String)*) = rows.toDF("id", "d").selectExpr(
-      "id", "CAST(d AS DATE) AS day")
-    Mutation.incrementalInsert(spark, path,
-      batch((1L, "2024-01-01"), (2L, "2024-01-02")), "day", Seq("id"))
-    // Replaying old rows + one new: only the new day passes the watermark.
-    Mutation.incrementalInsert(spark, path,
-      batch((1L, "2024-01-01"), (2L, "2024-01-02"), (3L, "2024-01-03")), "day", Seq("id"))
-    assert(spark.read.parquet(path).count() === 3)
-    Mutation.incrementalInsert(spark, path,
-      batch((3L, "2024-01-03")), "day", Seq("id"))
-    assert(spark.read.parquet(path).count() === 3)
+    assert(Versioned.read(spark, path).count() === 3)
   }
 
   test("scd2Apply opens/closes versions on change and keeps history") {
     val path = tmp()
     val t1 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val t2 = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
-    Mutation.scd2Apply(spark, path,
+    fold(path)(Scd2.scd2Apply(_,
       Seq((1L, "NYC"), (2L, "LA")).toDF("loc_id", "zone"),
-      Seq("loc_id"), Seq("zone"), t1)
+      Seq("loc_id"), Seq("zone"), t1))
     // Change zone of loc 1; loc 2 unchanged.
-    Mutation.scd2Apply(spark, path,
+    fold(path)(Scd2.scd2Apply(_,
       Seq((1L, "Brooklyn"), (2L, "LA")).toDF("loc_id", "zone"),
-      Seq("loc_id"), Seq("zone"), t2)
-    val all = spark.read.parquet(path)
+      Seq("loc_id"), Seq("zone"), t2))
+    val all = Versioned.read(spark, path)
     assert(all.count() === 3) // closed NYC + open Brooklyn + open LA
     val open = all.filter($"valid_to".isNull)
     assert(open.count() === 2)
@@ -66,25 +61,25 @@ class MutationSpec extends SparkSpec {
     assert(closed.head().getAs[String]("zone") === "NYC")
     assert(closed.head().getAs[java.sql.Timestamp]("valid_to") === t2)
     // Idempotency: re-applying the same snapshot changes nothing.
-    Mutation.scd2Apply(spark, path,
+    fold(path)(Scd2.scd2Apply(_,
       Seq((1L, "Brooklyn"), (2L, "LA")).toDF("loc_id", "zone"),
-      Seq("loc_id"), Seq("zone"), t2)
-    assert(spark.read.parquet(path).count() === 3)
+      Seq("loc_id"), Seq("zone"), t2))
+    assert(Versioned.read(spark, path).count() === 3)
   }
 
   test("scd2ApplyChanges: delete wins when a key is in both upserts and deleteKeys") {
     val path = tmp()
     val t1 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val t2 = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
-    Mutation.scd2ApplyChanges(spark, path,
+    fold(path)(Scd2.scd2ApplyChanges(_,
       Seq((1L, "NYC"), (2L, "LA")).toDF("loc_id", "zone"),
-      Seq.empty[Long].toDF("loc_id"), Seq("loc_id"), Seq("zone"), t1)
+      Seq.empty[Long].toDF("loc_id"), Seq("loc_id"), Seq("zone"), t1))
     // Key 1 arrives in BOTH inputs: the delete must close its open row
     // and the overlapping upsert must NOT mint a fresh open version.
-    Mutation.scd2ApplyChanges(spark, path,
+    fold(path)(Scd2.scd2ApplyChanges(_,
       Seq((1L, "Brooklyn")).toDF("loc_id", "zone"),
-      Seq(1L).toDF("loc_id"), Seq("loc_id"), Seq("zone"), t2)
-    val all = spark.read.parquet(path)
+      Seq(1L).toDF("loc_id"), Seq("loc_id"), Seq("zone"), t2))
+    val all = Versioned.read(spark, path)
     val k1 = all.filter($"loc_id" === 1).collect()
     assert(k1.length === 1, "overlapping upsert resurrected a deleted key")
     assert(k1.head.getAs[java.sql.Timestamp]("valid_to") === t2)
@@ -95,203 +90,10 @@ class MutationSpec extends SparkSpec {
 
   test("build: full refresh replaces, incremental merges (M3)") {
     val path = tmp()
-    Mutation.build(spark, path, Seq((1L, "x")).toDF("id", "v"), Seq("id"), fullRefresh = false)
-    Mutation.build(spark, path, Seq((2L, "y")).toDF("id", "v"), Seq("id"), fullRefresh = false)
-    assert(spark.read.parquet(path).count() === 2)
-    Mutation.build(spark, path, Seq((9L, "z")).toDF("id", "v"), Seq("id"), fullRefresh = true)
-    assert(spark.read.parquet(path).count() === 1)
-  }
-
-  /** (relative path → md5) of every data file under `root`. */
-  private def fileHashes(root: String): Map[String, String] = {
-    val base = java.nio.file.Paths.get(root)
-    val out = scala.collection.mutable.Map[String, String]()
-    java.nio.file.Files.walk(base).forEach { p =>
-      val rel = base.relativize(p).toString
-      if (java.nio.file.Files.isRegularFile(p) && rel.endsWith(".parquet"))
-        out(rel) = java.security.MessageDigest.getInstance("MD5")
-          .digest(java.nio.file.Files.readAllBytes(p))
-          .map("%02x".format(_)).mkString
-    }
-    out.toMap
-  }
-
-  test("mergeUpsertPruned rewrites ONLY touched partitions (byte-identical rest)") {
-    val path = tmp()
-    def rows(t: (Long, String, Double)*) = t.toDF("id", "day", "v")
-    val seed = rows((1L, "2024-01-01", 1.0), (2L, "2024-01-01", 2.0),
-      (3L, "2024-01-02", 3.0), (4L, "2024-01-03", 4.0))
-    Mutation.mergeUpsertPruned(spark, path, seed, Seq("id"), Seq("day"))
-    val before = fileHashes(path)
-    assert(before.keys.exists(_.startsWith("day=2024-01-02")))
-
-    // batch touches only day=2024-01-01: update id 2, insert id 5
-    val batch = rows((2L, "2024-01-01", 20.0), (5L, "2024-01-01", 5.0))
-    Mutation.mergeUpsertPruned(spark, path, batch, Seq("id"), Seq("day"))
-
-    val after = fileHashes(path)
-    def part(h: Map[String, String], d: String) = h.filter(_._1.startsWith(s"day=$d"))
-    // untouched partitions: identical file SET and identical BYTES
-    assert(part(after, "2024-01-02") === part(before, "2024-01-02"))
-    assert(part(after, "2024-01-03") === part(before, "2024-01-03"))
-    // touched partition: rewritten
-    assert(part(after, "2024-01-01") !== part(before, "2024-01-01"))
-
-    // merge result matches the whole-table mergeUpsert on the same inputs
-    val full = tmp()
-    Mutation.mergeUpsert(spark, full, seed, Seq("id"))
-    Mutation.mergeUpsert(spark, full, batch, Seq("id"))
-    val got = spark.read.parquet(path)
-      .select("id", "day", "v").as[(Long, String, Double)].collect().toSet
-    val want = spark.read.parquet(full)
-      .select("id", "day", "v").as[(Long, String, Double)].collect().toSet
-    assert(got === want)
-    assert(got.contains((2L, "2024-01-01", 20.0)) && got.size === 5)
-
-    // idempotency: replaying the batch changes nothing semantically
-    Mutation.mergeUpsertPruned(spark, path, batch, Seq("id"), Seq("day"))
-    assert(spark.read.parquet(path).count() === 5)
-  }
-
-  test("mergeUpsertPruned: new partitions move in; the scan is partition-pruned") {
-    val path = tmp()
-    def rows(t: (Long, String, Double)*) = t.toDF("id", "day", "v")
-    Mutation.mergeUpsertPruned(spark, path,
-      rows((1L, "2024-01-01", 1.0)), Seq("id"), Seq("day"))
-    Mutation.mergeUpsertPruned(spark, path,
-      rows((9L, "2024-02-09", 9.0)), Seq("id"), Seq("day"))
-    assert(spark.read.parquet(path).count() === 2)
-    assert(fileHashes(path).keys.exists(_.startsWith("day=2024-02-09")))
-
-    // the pruned-read shape: a filter on the partition column reaches
-    // the scan as a PartitionFilter (no data files of other partitions
-    // are listed, the whole point of the pruned merge)
-    val plan = spark.read.parquet(path)
-      .filter($"day" === "2024-02-09").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(day"),
-      s"expected partition filter in:\n$plan")
-  }
-
-  test("mergeUpsertFilePruned rewrites only files whose footer stats overlap the keys") {
-    val path = tmp()
-    // key-clustered layout: 4 files with disjoint id ranges (what
-    // repartitionByRange writes and compaction maintains)
-    spark.range(400).select($"id", ($"id" * 2).as("v"))
-      .repartitionByRange(4, $"id").sortWithinPartitions("id")
-      .write.parquet(path)
-    val before = fileHashes(path)
-    assert(before.size === 4)
-
-    // updates hit ids 10..20 — a single range file's stats interval
-    Mutation.mergeUpsertFilePruned(spark, path,
-      spark.range(10, 21).select($"id", lit(-1L).as("v")), "id")
-    val after = fileHashes(path)
-    val untouched = before.filter { case (k, h) => after.get(k).contains(h) }
-    assert(untouched.size === 3,
-      s"exactly 1 of 4 files should be rewritten; untouched = ${untouched.size}")
-
-    val got = spark.read.parquet(path)
-    assert(got.count() === 400)
-    assert(got.filter($"v" === -1L).count() === 11)
-    assert(got.filter($"id" === 15).select("v").as[Long].head() === -1L)
-    assert(got.select("id").distinct().count() === 400)
-
-    // an out-of-range key appends a fresh file; nothing existing moves
-    val before2 = fileHashes(path)
-    Mutation.mergeUpsertFilePruned(spark, path,
-      Seq((9999L, 0L)).toDF("id", "v"), "id")
-    val after2 = fileHashes(path)
-    assert(before2.forall { case (k, h) => after2.get(k).contains(h) },
-      "an append-only merge must not rewrite any existing file")
-    assert(spark.read.parquet(path).count() === 401)
-  }
-
-  test("mergeUpsertFilePruned past the key cap falls back to the " +
-      "distributed merge instead of collecting unbounded keys") {
-    val path = tmp()
-    spark.range(400).select($"id", ($"id" * 2).as("v"))
-      .repartitionByRange(4, $"id").sortWithinPartitions("id")
-      .write.parquet(path)
-    val before = fileHashes(path)
-    // 11 distinct keys against a cap of 4: the driver-side key set is
-    // never built (the collect is limit-bounded at cap+1) and the
-    // whole-table merge runs — observable as EVERY file rewritten,
-    // where the pruned path would have left 3 of 4 byte-identical
-    Mutation.mergeUpsertFilePruned(spark, path,
-      spark.range(10, 21).select($"id", lit(-1L).as("v")), "id",
-      maxPrunedKeys = 4)
-    val after = fileHashes(path)
-    assert(!before.exists { case (k, h) => after.get(k).contains(h) },
-      "the fallback path is a whole-table rewrite")
-    // semantics identical to the pruned path: same merged table
-    val got = spark.read.parquet(path)
-    assert(got.count() === 400)
-    assert(got.filter($"v" === -1L).count() === 11)
-    assert(got.select("id").distinct().count() === 400)
-    // at-the-cap batches still take the pruned path
-    val before2 = fileHashes(path)
-    Mutation.mergeUpsertFilePruned(spark, path,
-      Seq((9999L, 0L)).toDF("id", "v"), "id", maxPrunedKeys = 4)
-    assert(spark.read.parquet(path).count() === 401)
-    assert(before2.forall { case (k, h) =>
-      fileHashes(path).get(k).contains(h) },
-      "a 1-key batch under the cap must stay pruned (append-only here)")
-  }
-
-  test("mergeUpsertFilePruned prunes on string-key footer stats too") {
-    val path = tmp()
-    spark.range(100)
-      .select(format_string("k%03d", $"id").as("k"), $"id".as("v"))
-      .repartitionByRange(4, $"k").sortWithinPartitions("k")
-      .write.parquet(path)
-    val before = fileHashes(path)
-    Mutation.mergeUpsertFilePruned(spark, path,
-      Seq(("k005", -5L), ("k010", -10L)).toDF("k", "v"), "k")
-    val after = fileHashes(path)
-    assert(before.count { case (k, h) => after.get(k).contains(h) } === 3)
-    val got = spark.read.parquet(path)
-    assert(got.count() === 100)
-    assert(got.filter($"v" < 0).count() === 2)
-  }
-
-  test("compact bin-packs small files and preserves clustering for file pruning") {
-    val path = tmp()
-    // 16 tiny files from an incremental writer
-    spark.range(1600).select($"id", ($"id" * 3).as("v"))
-      .repartition(16).write.parquet(path)
-    def parquetFiles = new java.io.File(path).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    assert(parquetFiles.length === 16)
-    val before = spark.read.parquet(path)
-      .select("id", "v").as[(Long, Long)].collect().toSet
-
-    assert(Mutation.compact(spark, path, targetBytes = 1L << 40,
-      clusterBy = Some("id")))
-    assert(parquetFiles.length === 1)
-    val after = spark.read.parquet(path)
-      .select("id", "v").as[(Long, Long)].collect().toSet
-    assert(after === before, "compaction must not change table contents")
-
-    // compaction + clustering keeps file pruning effective: re-split
-    // into 4 clustered files, then a keyed merge touches only 1
-    spark.read.parquet(path).repartitionByRange(4, $"id")
-      .sortWithinPartitions("id")
-      .write.mode("overwrite").parquet(path + "2")
-    val h0 = spark.read.parquet(path + "2").count()
-    assert(h0 === 1600)
-    Mutation.mergeUpsertFilePruned(spark, path + "2",
-      Seq((5L, -1L)).toDF("id", "v"), "id")
-    assert(spark.read.parquet(path + "2").filter($"v" === -1L).count() === 1)
-
-    // already-compact dir: no-op
-    assert(!Mutation.compact(spark, path, targetBytes = 1L << 40))
-  }
-
-  test("mergeUpsertPruned rejects null partition values") {
-    val path = tmp()
-    val bad = Seq((1L, Option.empty[String], 1.0)).toDF("id", "day", "v")
-    intercept[IllegalArgumentException] {
-      Mutation.mergeUpsertPruned(spark, path, bad, Seq("id"), Seq("day"))
-    }
+    Versioned.commit(spark, path, Seq((1L, "x")).toDF("id", "v"))
+    Versioned.mergeUpsert(spark, path, Seq((2L, "y")).toDF("id", "v"), "id")
+    assert(Versioned.read(spark, path).count() === 2)
+    Versioned.commit(spark, path, Seq((9L, "z")).toDF("id", "v"), mode = "overwrite")
+    assert(Versioned.read(spark, path).count() === 1)
   }
 }

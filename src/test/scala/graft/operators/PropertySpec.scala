@@ -109,10 +109,11 @@ class PropertySpec extends SparkSpec {
       val path = java.nio.file.Files.createTempDirectory("graft-prop")
         .resolve("t").toString
       val batch = rows.toDF("id", "v").dropDuplicates("id")
-      Mutation.mergeUpsert(spark, path, batch, Seq("id"))
-      val c1 = spark.read.parquet(path).count()
-      Mutation.mergeUpsert(spark, path, batch, Seq("id"))
-      val c2 = spark.read.parquet(path).count()
+      Versioned.commit(spark, path, batch.limit(0)) // empty seed version
+      Versioned.mergeUpsert(spark, path, batch, "id")
+      val c1 = Versioned.read(spark, path).count()
+      Versioned.mergeUpsert(spark, path, batch, "id")
+      val c2 = Versioned.read(spark, path).count()
       assert(c1 === c2)
       assert(c1 === batch.count())
     }

@@ -10,7 +10,7 @@ import graft.SparkSpec
   * exact per version (insert / update_preimage / update_postimage /
   * delete), compactions must skip losslessly, merges committed without
   * cdf must fail the feed loudly, vacuum must collect change files with
-  * their versions — and driving Mutation.scd2ApplyChanges from the feed
+  * their versions — and driving Scd2.scd2ApplyChanges from the feed
   * must produce a history BYTE-IDENTICAL to snapshot-driven scd2Apply
   * over the same versions (the full Delta-CDF → dimension story). */
 class VersionedChangeFeedSpec extends SparkSpec {
@@ -131,11 +131,17 @@ class VersionedChangeFeedSpec extends SparkSpec {
     Versioned.delete(spark, root, col("id") === 1L,
       statsCols = Seq("id"), cdf = true)
 
+    // each fold reads its history table and commits the result back
+    def fold(hist: String)(f: Option[org.apache.spark.sql.DataFrame] =>
+        org.apache.spark.sql.DataFrame): Unit =
+      Versioned.commit(spark, hist,
+        f(Versioned.latestVersion(hist).map(_ => Versioned.read(spark, hist))),
+        mode = "overwrite")
     (1 to 3).foreach { v =>
       // snapshot path: the full table at version v
-      Mutation.scd2Apply(spark, bySnapshot,
+      fold(bySnapshot)(Scd2.scd2Apply(_,
         Versioned.readVersion(spark, root, v),
-        Seq("id"), Seq("tag"), ts(v - 1))
+        Seq("id"), Seq("tag"), ts(v - 1)))
       // feed path: only version v's envelopes
       val changes = Versioned.changeFeed(spark, root, v - 1L, Some(v))
       val upserts = changes
@@ -143,17 +149,17 @@ class VersionedChangeFeedSpec extends SparkSpec {
         .select("id", "tag")
       val deletes = changes.filter(col("_change_type") === "delete")
         .select("id")
-      Mutation.scd2ApplyChanges(spark, byFeed, upserts, deletes,
-        Seq("id"), Seq("tag"), ts(v - 1))
+      fold(byFeed)(Scd2.scd2ApplyChanges(_, upserts, deletes,
+        Seq("id"), Seq("tag"), ts(v - 1)))
     }
-    val a = spark.read.parquet(bySnapshot).orderBy("scd_id", "valid_from")
+    val a = Versioned.read(spark, bySnapshot).orderBy("scd_id", "valid_from")
       .collect().toSeq
-    val b = spark.read.parquet(byFeed).orderBy("scd_id", "valid_from")
+    val b = Versioned.read(spark, byFeed).orderBy("scd_id", "valid_from")
       .collect().toSeq
     assert(a === b, "feed-driven history diverged from snapshot-driven")
     // and the history is what it should be: 1 closed (deleted id 1),
     // 1 closed + 1 open for updated id 2, opens for 3 and 9
-    val open = spark.read.parquet(byFeed).filter(col("valid_to").isNull)
+    val open = Versioned.read(spark, byFeed).filter(col("valid_to").isNull)
       .select("id", "tag").as[(Long, String)].collect().toSet
     assert(open === Set((2L, "B"), (3L, "a"), (9L, "new")))
   }

@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Z-order clustering: the Morton math on fixtures, and the property
-  * that justifies its existence — measured multi-column file skipping
-  * from parquet footer stats, against a single-key sort baseline.
+/** Z-order clustering: the Morton math on fixtures. The property that
+  * justifies its existence — measured multi-column file skipping against
+  * a single-key sort baseline — is pinned on the table format itself
+  * (VersionedZOrderSpec).
   */
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
@@ -45,50 +46,5 @@ class ZOrderSpec extends SparkSpec {
       lit(null).cast("long").as("y"))
     val out = ZOrder.cluster(df, Seq("x", "y"), nOut = 2)
     assert(out.count() === 100)
-  }
-
-  test("z-ordered compaction skips files on BOTH columns; single-key sort only on one") {
-    // two independent uniform dimensions — the multi-filter workload
-    val n = 40000L
-    val data = spark.range(n).select(
-      (col("id") % 200).as("x"),
-      ((col("id") * 7919 + 13) % 200).as("y"),
-      col("id").as("payload"))
-
-    def overlapping(path: String, column: String, lo: Long, hi: Long): Int =
-      ZOrder.fileRanges(spark, path, column)
-        .count { case (_, mn, mx) => mn <= hi && mx >= lo }
-
-    def writeSmallFiles(path: String): Unit =
-      data.repartition(16).write.mode("overwrite").parquet(path)
-
-    val zPath = java.nio.file.Files.createTempDirectory("zorder").toString + "/t"
-    writeSmallFiles(zPath)
-    assert(ZOrder.compact(spark, zPath, Seq("x", "y"), targetBytes = 64 * 1024))
-    val zFiles = ZOrder.fileRanges(spark, zPath, "x").size
-    assert(zFiles >= 4, s"need several output files to measure skipping, got $zFiles")
-
-    val sPath = java.nio.file.Files.createTempDirectory("sorted").toString + "/t"
-    writeSmallFiles(sPath)
-    assert(Mutation.compact(spark, sPath, targetBytes = 64 * 1024,
-      clusterBy = Some("x")))
-    val sFiles = ZOrder.fileRanges(spark, sPath, "x").size
-
-    // content identical to the source under both layouts
-    val want = data.as[(Long, Long, Long)].collect().toSet
-    assert(spark.read.parquet(zPath).as[(Long, Long, Long)].collect().toSet === want)
-    assert(spark.read.parquet(sPath).as[(Long, Long, Long)].collect().toSet === want)
-
-    // a narrow y-filter: x-sorted layout cannot skip anything (every
-    // file spans the full y domain); z-order must skip a real fraction
-    val zHit = overlapping(zPath, "y", 0, 24)
-    val sHit = overlapping(sPath, "y", 0, 24)
-    assert(sHit === sFiles, s"x-sort unexpectedly skipped y files ($sHit/$sFiles)")
-    assert(zHit < zFiles, s"z-order skipped nothing on y ($zHit/$zFiles)")
-    assert(zHit.toDouble / zFiles <= 0.75,
-      s"z-order y-skip too weak: $zHit/$zFiles files overlap y∈[0,24]")
-    // and x stays prunable too (partial ranges, not destroyed)
-    val zx = overlapping(zPath, "x", 0, 24)
-    assert(zx < zFiles, s"z-order lost x prunability ($zx/$zFiles)")
   }
 }

@@ -141,6 +141,32 @@ class TopicLogSpec extends SparkSpec {
     assert(fin.filter($"value" === "TAIL").count() === 1)
   }
 
+  test("a replayed sink batch leaves the destination count unchanged") {
+    val root = Files.createTempDirectory("graft-topic").toString
+    val a = root + "/topicA"
+    val b = root + "/topicB"
+    val ck = root + "/ck"
+    TopicLog.append(spark, batch(
+      (0 until 15).map(i => (s"k$i", s"v$i", "2024-01-01 00:00:00")): _*), a, 2)
+    def pump() = {
+      val q = TopicLog.sink(
+        spark.readStream.format(TopicLogSource.Name).option("path", a).load(),
+        b, nPartitions = 3, checkpointDir = ck)
+      q.awaitTermination()
+      q
+    }
+    pump()
+    def count() = spark.read.format(TopicLogSource.Name).option("path", b).load().count()
+    assert(count() === 15)
+    // Crash after batch 0's segments published, before its commit-log
+    // entry: the restart replays batch 0, whose tagged append skips
+    // every partition that already has its segment.
+    assert(new java.io.File(ck, "commits/0").delete())
+    new java.io.File(ck, "commits/.0.crc").delete()
+    assert(pump().recentProgress.map(_.batchId).toSeq === Seq(0L))
+    assert(count() === 15)
+  }
+
   test("null keys route deterministically instead of NPEing") {
     val dir = Files.createTempDirectory("graft-topic").toString + "/tnull"
     val withNull = Seq((Option.empty[String], "orphan", "2024-01-01 00:00:00"),

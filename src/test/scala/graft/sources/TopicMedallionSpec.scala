@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.Tables
+import graft.operators.Versioned
 import graft.streaming.Streams
 
 /** The reference's ingestion spine — generator → topic → bronze —
@@ -68,7 +69,7 @@ class TopicMedallionSpec extends SparkSpec {
     // The reference's P12 pipeline shape end-to-end: Debezium envelopes
     // produced into a topic, streamed through the DSv2 connector,
     // folded into an SCD2 dimension — history byte-identical to
-    // independently maintained FULL snapshots through Mutation.scd2Apply
+    // independently maintained FULL snapshots through Scd2.scd2Apply
     // (the x07 oracle path). Same fixture as CdcScd2Spec so the two
     // specs pin the same semantics over different transports.
     import org.apache.spark.sql.types._
@@ -123,12 +124,15 @@ class TopicMedallionSpec extends SparkSpec {
       (4000L, Seq((1L, "a2", 11L), (2L, "b3", 22L), (3L, "c", 30L), (4L, "d", 40L))),
       (5000L, Seq((1L, "a2", 11L), (3L, "c", 30L))))
     snapshots.foreach { case (tsMs, rows) =>
-      graft.operators.Mutation.scd2Apply(spark, snapTarget,
-        rows.toDF("id", "name", "val"),
-        Seq("id"), Seq("name", "val"), new java.sql.Timestamp(tsMs))
+      val existing = Versioned.latestVersion(snapTarget)
+        .map(_ => Versioned.read(spark, snapTarget))
+      Versioned.commit(spark, snapTarget,
+        graft.operators.Scd2.scd2Apply(existing, rows.toDF("id", "name", "val"),
+          Seq("id"), Seq("name", "val"), new java.sql.Timestamp(tsMs)),
+        mode = "overwrite")
     }
 
-    def history(path: String) = spark.read.parquet(path)
+    def history(root: String) = Versioned.read(spark, root)
       .select("id", "name", "val", "scd_hash", "scd_id", "valid_from", "valid_to")
       .as[(Long, String, Long, String, String, java.sql.Timestamp, Option[java.sql.Timestamp])]
       .collect().toSet

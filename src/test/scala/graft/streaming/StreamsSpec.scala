@@ -1,12 +1,13 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.Tables
-import graft.operators.Medallion
+import graft.operators.{Medallion, Versioned}
 
 /** Streaming semantics driven by the sf0.001 events as a bounded file
   * stream (Trigger.AvailableNow ⇒ deterministic, ST2). */
@@ -104,6 +105,15 @@ class StreamsSpec extends SparkSpec {
     assert(got === want, "streamed leaderboard diverges from batch top-k")
   }
 
+  /** Crash after the last micro-batch's sink write, before its
+    * commit-log entry: the next run replays that batch. */
+  private def dropLastCommit(ck: String): Long = {
+    val last = new File(ck, "commits").list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(new File(ck, s"commits/$last").delete())
+    new File(ck, s"commits/.$last.crc").delete()
+    last
+  }
+
   test("streaming PQ encode against a frozen codebook equals batch encode") {
     import spark.implicits._
     val emb = Tables.t(spark, sfDir, "embeddings")
@@ -113,15 +123,37 @@ class StreamsSpec extends SparkSpec {
     emb.coalesce(3).write.mode("overwrite").parquet(srcDir)
     val out = Files.createTempDirectory("pq-out").toString + "/codes"
     val ck = Files.createTempDirectory("pq-ck").toString
-    val stream = spark.readStream
-      .schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(srcDir)
-    Streams.pqEncodeStream(stream, codebook, out, ck).awaitTermination()
-    val streamed = spark.read.parquet(out)
-      .as[(Long, Int, Int)].collect().toSet
+    def run() = {
+      val stream = spark.readStream
+        .schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(srcDir)
+      val q = Streams.pqEncodeStream(stream, codebook, out, ck)
+      q.awaitTermination()
+      q
+    }
+    run()
+    def codes() = Versioned.read(spark, out).as[(Long, Int, Int)].collect()
     val batch = graft.operators.Similarity.pqEncode(emb, codebook)
       .as[(Long, Int, Int)].collect().toSet
-    assert(streamed === batch, "incremental PQ codes diverge from batch")
+    assert(codes().toSet === batch, "incremental PQ codes diverge from batch")
+    // a replayed append is recognized by its batchId: no duplicate codes
+    val replayed = dropLastCommit(ck)
+    assert(run().recentProgress.map(_.batchId).toSeq === Seq(replayed))
+    val after = codes()
+    assert(after.length === after.distinct.length, "a replay duplicated code rows")
+    assert(after.toSet === batch)
     codebook.unpersist()
+  }
+
+  test("PQ encode refuses a target left by the plain-parquet sink") {
+    val emb = Tables.t(spark, sfDir, "embeddings")
+    val out = Files.createTempDirectory("pq-out").toString + "/codes"
+    val ck = Files.createTempDirectory("pq-ck").toString
+    spark.range(1).write.parquet(out)
+    // refused before the stream starts, so no codebook is trained
+    val e = intercept[IllegalStateException](Streams.pqEncodeStream(
+      spark.readStream.schema(emb.schema).parquet(out), codebook = emb, out, ck))
+    Seq(out, ck).foreach(p => assert(e.getMessage.contains(p), p))
+    assert(Versioned.latestVersion(out).isEmpty)
   }
 
   test("streaming silver MV equals batch silver on a dup-free stream") {
@@ -135,7 +167,9 @@ class StreamsSpec extends SparkSpec {
     assert(streamed.select("event_sk").except(batch.select("event_sk")).count() === 0)
   }
 
-  test("DLQ split routes invalid rows to the dead-letter sink") {
+  /** One valid and one invalid event; the source, valid, DLQ and
+    * checkpoint dirs. */
+  private def dlqDirs(): (String, String, String, String) = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-dlq-src").resolve("data").toString
     val good = Files.createTempDirectory("graft-dlq-good").toString
@@ -146,9 +180,36 @@ class StreamsSpec extends SparkSpec {
       (2L, java.sql.Timestamp.valueOf("2024-01-05 10:01:00"), 8L, "view", -5.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(dir)
+    (dir, good, bad, ck)
+  }
+
+  test("DLQ split routes invalid rows to the dead-letter sink") {
+    val (dir, good, bad, ck) = dlqDirs()
     Streams.withDlq(Streams.fileSource(spark, dir), good, bad, ck).awaitTermination()
-    assert(spark.read.parquet(good).count() === 1)
-    assert(spark.read.parquet(bad).count() === 1)
-    assert(spark.read.parquet(bad).head().getAs[Long]("event_id") === 2L)
+    assert(Versioned.read(spark, good).count() === 1)
+    assert(Versioned.read(spark, bad).count() === 1)
+    assert(Versioned.read(spark, bad).head().getAs[Long]("event_id") === 2L)
+  }
+
+  test("a replayed DLQ batch lands its valid and dead-letter rows once") {
+    val (dir, good, bad, ck) = dlqDirs()
+    Streams.withDlq(Streams.fileSource(spark, dir), good, bad, ck).awaitTermination()
+    assert(dropLastCommit(ck) === 0L)
+    val q = Streams.withDlq(Streams.fileSource(spark, dir), good, bad, ck)
+    q.awaitTermination()
+    assert(q.recentProgress.map(_.batchId).toSeq === Seq(0L))
+    assert(Versioned.read(spark, good).count() === 1)
+    assert(Versioned.read(spark, bad).count() === 1)
+  }
+
+  test("DLQ split refuses sinks left by the plain-parquet sink") {
+    val (dir, good, bad, ck) = dlqDirs()
+    spark.read.parquet(dir).write.mode("overwrite").parquet(bad)
+    val marker = bad + ".lastbatch"
+    Files.writeString(Paths.get(marker), "0")
+    val e = intercept[IllegalStateException](
+      Streams.withDlq(Streams.fileSource(spark, dir), good, bad, ck))
+    Seq(bad, ck, marker).foreach(p => assert(e.getMessage.contains(p), p))
+    assert(Versioned.latestVersion(good).isEmpty)
   }
 }
