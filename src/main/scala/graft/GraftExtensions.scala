@@ -19,10 +19,35 @@ import graft.functions.expressions.{BloomFilter, CmsSketch, DotProduct, HistQuan
   * or, on an ALREADY-BUILT session (extensions bind at session build),
   * `GraftExtensions.registerFunctions(spark)` — same function set, live
   * immediately (planner strategy via `spark.experimental.extraStrategies`).
+  *
+  * Both routes also install the engine's `file:` filesystem
+  * ([[graft.io.NioLocalFs]]) for the whole JVM. Hadoop's local
+  * filesystem, without the `libhadoop.so` native library that stock
+  * Spark does not ship, starts a `chmod` process for every file and
+  * directory it creates and a `readlink` process for every rename
+  * through `FileContext`: about 230 processes per medallion operation
+  * (bench/fork_free_fs.md), most of each streaming checkpoint commit's
+  * time. The engine's classes do the same work through `java.nio`, with
+  * the same `.crc` checksum files and atomic renames. The install
+  * changes which class new `FileSystem` and `FileContext` instances
+  * get. `withExtensions` runs `apply` before the SparkContext starts;
+  * through `spark.sql.extensions` or `registerFunctions` a `file:`
+  * `FileSystem` that Hadoop cached before the install stays in use for
+  * data, and only checkpoints (uncached `FileContext`) switch. Opt out
+  * by naming classes, which as explicit values win over the installed
+  * defaults, for example Hadoop's:
+  * {{{
+  *   --conf spark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem
+  *   --conf spark.hadoop.fs.AbstractFileSystem.file.impl=org.apache.hadoop.fs.local.LocalFs
+  * }}}
+  * or by naming any `file:` classes in a `core-site.xml`, which skips
+  * the install. It is per JVM: cluster executors keep Hadoop's default
+  * unless their own configuration names `graft.io.NioLocalFileSystem`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    graft.io.NioLocalFs.install()
     // Scale-safety rewrite: SUM(x) OVER () → broadcast one-row aggregate
     // (an unpartitioned window serializes the dataset through one task;
     // see graft.plans.RewriteGlobalWindowTotals).
@@ -151,8 +176,10 @@ object GraftExtensions {
         intArg(children(1)))))
 
   /** Register the function set on a live session (idempotent — the
-    * registry overwrites by identifier). */
+    * registry overwrites by identifier), and install the engine's `file:`
+    * filesystem (see [[GraftExtensions]]). */
   def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
+    graft.io.NioLocalFs.install()
     functions.foreach { case (id, inf, builder) =>
       org.apache.spark.sql.GraftShims.registerFunction(spark, id, inf, builder)
     }

@@ -15,9 +15,12 @@ object Harness {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** `local[cpus]` with the engine's extensions, AQE on, UTC, the UI
-    * off. Shuffle partitions equal the context's default parallelism —
-    * `cpus` when this call starts the context; an already-running
-    * context (a test JVM) keeps its own core count. */
+    * off. `withExtensions` runs before the context starts, so the
+    * context's checkpoint and data I/O use the engine's `file:`
+    * filesystem (see [[GraftExtensions]]). Shuffle partitions equal the
+    * context's default parallelism — `cpus` when this call starts the
+    * context; an already-running context (a test JVM) keeps its own
+    * core count. */
   def session(): SparkSession = {
     val n = cpus
     require(n > 0, s"SPARK_GRAFT_CPUS must be positive, got $n")
