@@ -284,41 +284,38 @@ object JoinMv {
     * version-granular metadata. */
   def stream(spark: SparkSession, aRoot: String, bRoot: String,
       mvRoot: String, keys: Seq[String],
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.lit
-    def ticks(root: String) = spark.readStream
-      .format(graft.sources.VersionedSource.Name)
-      .option("path", root)
-      .load()
-      .select(lit(1).as("tick"))
-    ticks(aRoot).unionByName(ticks(bRoot))
-      .writeStream
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        refresh(spark, aRoot, bRoot, mvRoot, keys)
-        () // refresh is idempotent; its CAS is the consistency guard
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+    tickStream(spark, aRoot, bRoot, checkpointDir)(
+      refresh(spark, aRoot, bRoot, mvRoot, keys))
 
   /** [[stream]]'s CDC-capable sibling: same trigger plumbing, each
     * micro-batch runs [[refreshCdc]] — so dim updates and fact deletes
     * flow into the MV continuously, not just appends. */
   def streamCdc(spark: SparkSession, aRoot: String, bRoot: String,
       mvRoot: String, keys: Seq[String], aId: String, bId: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.lit
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+    tickStream(spark, aRoot, bRoot, checkpointDir)(
+      refreshCdc(spark, aRoot, bRoot, mvRoot, keys, aId, bId))
+
+  /** One micro-batch per batch of new versions on either source, each
+    * running `onTick`. A tick is the `_change_type` envelope column:
+    * projecting it makes each source stream its change feed, so a
+    * merge or delete commit ticks like an append instead of failing
+    * the row stream. */
+  private def tickStream(spark: SparkSession, aRoot: String,
+      bRoot: String, checkpointDir: String)(onTick: => Any)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    import org.apache.spark.sql.functions.col
     def ticks(root: String) = spark.readStream
       .format(graft.sources.VersionedSource.Name)
       .option("path", root)
       .load()
-      .select(lit(1).as("tick"))
+      .select(col("_change_type").as("tick"))
     ticks(aRoot).unionByName(ticks(bRoot))
       .writeStream
       .foreachBatch { (_: DataFrame, _: Long) =>
-        refreshCdc(spark, aRoot, bRoot, mvRoot, keys, aId, bId)
-        ()
+        onTick
+        () // each refresh is idempotent; its CAS is the consistency guard
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -1700,6 +1700,21 @@ object Versioned {
       latestVersion(root).getOrElse(
         throw new IllegalArgumentException(s"no versions at $root")))
 
+  /** A wall-clock instant as epoch millis, in each form the reader
+    * options accept (`timestampAsOf`, `startingTimestamp`): epoch
+    * millis, an ISO instant (`2024-01-01T00:00:00Z`), or a
+    * `yyyy-MM-dd HH:mm:ss` wall clock read as UTC. */
+  def parseTimestampMillis(s: String): Long = {
+    val t = s.trim
+    if (t.matches("\\d+")) t.toLong
+    else try java.time.Instant.parse(t).toEpochMilli
+    catch {
+      case _: java.time.format.DateTimeParseException =>
+        java.time.LocalDateTime.parse(t.replace(' ', 'T'))
+          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+    }
+  }
+
   /** TIMESTAMP AS OF resolution: the version that was CURRENT at
     * `tsMillis` — the last version whose publish instant is
     * at-or-before it, in version order (clock-skewed commit times
@@ -2593,12 +2608,6 @@ object Versioned {
       case None => readVersion(spark, root, v).schema
     }
   }
-
-  /** Total live bytes of `version` per the manifest — the exact number
-    * a relation's `sizeInBytes` should report so Catalyst can make the
-    * broadcast decision from commit-time metadata instead of a guess. */
-  def tableBytes(root: String, version: Long): Long =
-    readManifest(root, version).files.map(_.bytes).sum
 
   /** (live bytes, live rows) of `version` per the manifest — DSv2
     * `SupportsReportStatistics` reads both so Catalyst's broadcast

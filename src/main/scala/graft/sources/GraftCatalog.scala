@@ -42,15 +42,17 @@ import graft.operators.Versioned
   * manifest log's CAS atomicity instead of adding a second source of
   * truth that could diverge from it.
   *
-  * Every plain batch or stream read takes the native DSv2 scan
-  * ([[GraftRowLevelScan]]: vectorized parquet, manifest-stats file
-  * pruning, commit-time statistics for auto-broadcast, pending
-  * deletion vectors applied in the reader) unless a metadata-only
-  * aggregate answers from the manifest. Batch writes ride the
-  * DSv2→V1 write bridge (`V1Write`), streaming and dynamic overwrite
-  * the executor-staged DSv2 write core — every write is an atomic CAS
-  * manifest commit with the path-addressed API's semantics, just
-  * named.
+  * A catalog name and a path (`format("graft-versioned")`,
+  * [[VersionedSource]]) resolve to the same [[GraftTable]], so both
+  * read, stream and stream-write on one DSv2 stack. Every plain batch
+  * read takes the native scan ([[GraftRowLevelScan]]: vectorized
+  * parquet, manifest-stats file pruning, commit-time statistics for
+  * auto-broadcast, pending deletion vectors applied in the reader)
+  * unless a metadata-only aggregate answers from the manifest; every
+  * stream read takes [[GraftMicroBatchStream]]. Catalog batch writes
+  * ride the DSv2→V1 write bridge (`V1Write`), streaming writes and
+  * dynamic overwrite the executor-staged DSv2 write core — every write
+  * is one atomic CAS manifest commit.
   */
 object GraftCatalog {
   /** The one identifier→path rule both surfaces share — the catalog's
@@ -539,36 +541,47 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 }
 
-/** One catalog-addressed versioned table, pinned to `versionAsOf`
-  * (time travel) or floating at latest.
+/** One versioned table, addressed by catalog name or (with
+  * `pathAddressed`) by its root through [[VersionedSource]], pinned to
+  * `versionAsOf` (time travel) or floating at latest.
   *
-  * STREAMING is NATIVE DSv2 end to end:
+  * STREAMING is NATIVE DSv2 end to end, for either address:
   *
-  *  - `spark.readStream.table("graft.ns.t")` plans through the
-  *    `MICRO_BATCH_READ` capability onto [[GraftMicroBatchStream]] —
-  *    a ROW stream of the table's appends (manifest versions as
+  *  - `spark.readStream.table("graft.ns.t")` (or
+  *    `readStream.format("graft-versioned").load(root)`) plans through
+  *    the `MICRO_BATCH_READ` capability onto [[GraftMicroBatchStream]]
+  *    — a ROW stream of the table's appends (manifest versions as
   *    offsets, exactly-once restart; Delta's streaming-read default:
   *    a row-removing commit fails loudly unless `skipChangeCommits`).
-  *    Reader options (`startingVersion`, `maxVersionsPerTrigger`,
-  *    `skipChangeCommits`) pass through the catalog path;
+  *    Projecting the `_change_type` / `_commit_version` metadata
+  *    columns makes it the full change feed ([[GraftStreamEnvelope]]).
+  *    Reader options: `startingVersion`, `startingTimestamp`,
+  *    `maxVersionsPerTrigger`, `maxFilesPerTrigger`,
+  *    `maxBytesPerTrigger`, `skipChangeCommits`;
   *  - `spark.readStream.table("graft.ns.t.changes")` is the CHANGE
   *    FEED metadata table ([[GraftFeedTable]], Iceberg's
   *    `db.table.changes` convention) — the full CDC envelope, batch
   *    and streaming;
-  *  - `df.writeStream.toTable("graft.ns.t")` lands each micro-batch
+  *  - `df.writeStream.toTable("graft.ns.t")` (or
+  *    `writeStream.format("graft-versioned")`) lands each micro-batch
   *    as one atomic manifest commit with the in-manifest
-  *    (appId, batchId) replay guard through the executor-staged
+  *    (queryId, epochId) replay guard through the executor-staged
   *    DSv2 write core.
   *
-  * The `v1Table` face remains for Spark surfaces that still consult
-  * the fallback slot (never taken for reads now that MICRO_BATCH_READ
-  * is native). This is the reference's bronze shape — a streaming
-  * write addressed by table name (`pipelines/02-kafka-spark-iceberg/
-  * spark/jobs/bronze_ingest.py:173-183`, `writeStream…toTable`). */
+  * This is the reference's bronze shape — a streaming write addressed
+  * by table name (`pipelines/02-kafka-spark-iceberg/spark/jobs/
+  * bronze_ingest.py:173-183`, `writeStream…toTable`).
+  *
+  * A path-addressed table declares no batch-write capability: Spark
+  * then routes every `df.write` save mode to
+  * [[VersionedSource.createRelation]], the one path batch write.
+  * `streamEnvelope` names the envelope columns a stream over this
+  * table serves (set by [[GraftStreamEnvelope]], never by callers). */
 final class GraftTable(spark: SparkSession, fullName: String,
-    root: String, versionAsOf: Option[Long])
+    root: String, versionAsOf: Option[Long],
+    pathAddressed: Boolean = false,
+    private[sources] val streamEnvelope: Seq[String] = Nil)
     extends Table with SupportsRead with SupportsWrite
-    with org.apache.spark.sql.GraftV1FallbackTable
     with SupportsRowLevelOperations with SupportsDelete
     with SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
@@ -615,40 +628,32 @@ final class GraftTable(spark: SparkSession, fullName: String,
 
   override def version(): String = pinned.toString
 
-  /** The V1 face of this table for Spark's streaming fallback: the
-    * [[VersionedSource]] provider at this root. The analyzer turns it
-    * into `StreamingRelation(DataSource("graft-versioned", path=root))`
-    * for `readStream.table`, and `DataStreamWriter.toTable` routes a
-    * streaming write through the provider's exactly-once V1 sink. */
-  override def v1Table: org.apache.spark.sql.catalyst.catalog.CatalogTable = {
-    import org.apache.spark.sql.catalyst.catalog._
-    val parts = fullName.split('.').toSeq
-    CatalogTable(
-      identifier = org.apache.spark.sql.catalyst.TableIdentifier(
-        parts.last,
-        if (parts.size >= 2) Some(parts(parts.size - 2)) else None,
-        parts.headOption.filter(_ => parts.size >= 3)),
-      tableType = CatalogTableType.EXTERNAL,
-      storage = CatalogStorageFormat.empty.copy(
-        locationUri = Some(new File(root).getAbsoluteFile.toURI)),
-      schema = schema,
-      provider = Some(VersionedSource.Name))
-  }
+  /** This table, pinned where it is, with a stream that serves the
+    * `names` envelope columns after the data columns. */
+  private[sources] def withStreamEnvelope(names: Seq[String]): GraftTable =
+    new GraftTable(spark, fullName, root, Some(pinned), pathAddressed, names)
 
-  // batch writes ride the V1 bridge (append / truncate-overwrite /
-  // replaceWhere); STREAMING_WRITE and OVERWRITE_DYNAMIC ride the
+  // catalog batch writes ride the V1 bridge (append / truncate-overwrite
+  // / replaceWhere); STREAMING_WRITE and OVERWRITE_DYNAMIC ride the
   // executor-staged DSv2 core (GraftWriteCore) — tasks write parquet,
-  // the driver publishes metadata only
+  // the driver publishes metadata only. A path-addressed table keeps
+  // only the streaming write (TRUNCATE = Complete mode).
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
-      TableCapability.STREAMING_WRITE, TableCapability.OVERWRITE_DYNAMIC,
-      TableCapability.MICRO_BATCH_READ)
+    if (pathAddressed)
+      util.EnumSet.of(TableCapability.BATCH_READ,
+        TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE,
+        TableCapability.TRUNCATE)
+    else
+      util.EnumSet.of(TableCapability.BATCH_READ,
+        TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
+        TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
+        TableCapability.STREAMING_WRITE, TableCapability.OVERWRITE_DYNAMIC,
+        TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(spark, root, pinned, schema, options)
+    new GraftScanBuilder(spark, root, pinned, schema, options,
+      streamEnvelope)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(spark, root, info)
@@ -658,26 +663,28 @@ final class GraftTable(spark: SparkSession, fullName: String,
     * are the row identity the delta-based operation's `rowId` speaks
     * (and what the deletion-vector verbs key on); the group-based
     * rewrite carries `_file` alone for file provenance. Served by the
-    * native scan. A name the table schema declares as a data column
-    * is omitted: there it reads as data. */
-  override def metadataColumns(): Array[MetadataColumn] =
-    Array[MetadataColumn](
+    * native scan. `_change_type` / `_commit_version` are the change-feed
+    * envelope, served by streams only ([[GraftStreamEnvelope]]; a
+    * batch scan refuses them). A name the table schema declares as a
+    * data column is omitted: there it reads as data. */
+  override def metadataColumns(): Array[MetadataColumn] = {
+    def meta(n: String, dt: org.apache.spark.sql.types.DataType,
+        nullable: Boolean, doc: String): MetadataColumn =
       new MetadataColumn {
-        override def name(): String = "_file"
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.StringType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "manifest-relative path of the row's data file"
-      },
-      new MetadataColumn {
-        override def name(): String = "_pos"
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "row index within the row's data file"
-      }).filterNot(c => schema.fieldNames.exists(_.equalsIgnoreCase(c.name)))
+        override def name(): String = n
+        override def dataType(): org.apache.spark.sql.types.DataType = dt
+        override def isNullable: Boolean = nullable
+        override def comment(): String = doc
+      }
+    (Array(
+      meta("_file", org.apache.spark.sql.types.StringType, nullable = false,
+        "manifest-relative path of the row's data file"),
+      meta("_pos", org.apache.spark.sql.types.LongType, nullable = false,
+        "row index within the row's data file")) ++
+      VersionedSource.envelope.fields.map(f => meta(f.name, f.dataType,
+        nullable = true, "change-feed envelope (streaming reads)")))
+      .filterNot(c => schema.fieldNames.exists(_.equalsIgnoreCase(c.name)))
+  }
 
   /** The effective row-level mode for this snapshot: `cow` (group-based
     * copy-on-write replace), `mor` (delta-based deletion vectors), or
@@ -844,14 +851,33 @@ final class GraftTable(spark: SparkSession, fullName: String,
   override def toString: String = s"GraftTable($fullName, v$pinned)"
 }
 
+/** A path-addressed root with no version yet, as a first streaming
+  * write sees it: write-only, through the same [[GraftWriteBuilder]] a
+  * live table uses — the first commit creates the table. (A first
+  * batch `save()` goes to [[VersionedSource.createRelation]]; a read
+  * fails in [[VersionedSource.inferSchema]], naming the root.) */
+private[sources] final class GraftUnbornTable(spark: SparkSession,
+    root: String, tableSchema: StructType) extends Table with SupportsWrite {
+
+  override def name(): String = root
+  override def schema(): StructType = tableSchema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new GraftWriteBuilder(spark, root, info)
+  override def toString: String = s"GraftUnbornTable($root)"
+}
+
 /** Pushdown capture: filters feed manifest-stats FILE pruning (plus
   * in-scan re-application for parquet row-group pruning), required
-  * columns the projection — both strictly advisory, all filters are
-  * re-applied by Spark above the scan so stats gaps can't change
-  * results (the same contract as the path-addressed V1 relation). */
+  * columns the projection — both strictly advisory: every filter the
+  * scan does not apply exactly is re-applied by Spark above it, so
+  * stats gaps can't change results. `streamEnvelope` is what a stream
+  * built from this builder serves after the data columns. */
 final class GraftScanBuilder(spark: SparkSession, root: String,
     version: Long, tableSchema: StructType,
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
+    streamEnvelope: Seq[String] = Nil)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -979,10 +1005,11 @@ final class GraftScanBuilder(spark: SparkSession, root: String,
     aggScan.getOrElse(
       new GraftRowLevelScan(spark, root, version, required,
         pushed.toIndexedSeq, _ => (), dvAware = true,
-        // streaming (`readStream.table`) rides the same builder: the
-        // scan carries the native micro-batch stream factory
+        // streaming rides the same builder: the scan carries the
+        // native micro-batch stream factory
         streamFactory = Some(() => new GraftMicroBatchStream(spark, root,
-          required, tableSchema, options)),
+          StructType(required.fields ++ streamEnvelope.map(n =>
+            VersionedSource.envelope(n))), tableSchema, options)),
         spjAllowed = true,
         limitHint = limitHint.filter(_ => residual.isEmpty)))
 }

@@ -12,9 +12,10 @@ import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.Versioned
 
-/** The NATIVE DSv2 micro-batch stream over a catalog table — what
-  * `spark.readStream.table("cat.ns.t")` plans through the
-  * `MICRO_BATCH_READ` capability (no V1 fallback node anywhere).
+/** The NATIVE DSv2 micro-batch stream over a versioned table — what
+  * `spark.readStream.table("cat.ns.t")` and
+  * `readStream.format("graft-versioned").load(root)` plan through the
+  * `MICRO_BATCH_READ` capability.
   * Offsets are manifest versions (atomic, totally ordered,
   * checkpoint-serializable); a micro-batch `(start, end]` is planned
   * PARTITION-GRAIN straight from the manifests:
@@ -26,14 +27,16 @@ import graft.operators.Versioned
   *    `skipChangeCommits=true` (Delta's option, lossy) — or unless
   *    the query projects the envelope, below;
   *  - projecting the `_change_type` / `_commit_version` METADATA
-  *    columns upgrades the stream to the full row-level change feed
+  *    columns ([[GraftStreamEnvelope]]) upgrades the stream to the
+  *    full row-level change feed
   *    ([[Versioned.changeFeed]] semantics): inserts from new files,
   *    CoW merge/delete/update from their cdf files, deletion-vector
   *    deletes replayed lazily from the manifest + immutable sidecars
   *    — byte-equal to the batch feed.
   *
-  * Reader options ride the catalog path: `startingVersion` (default
-  * 0 = full history), `maxVersionsPerTrigger` (admission control),
+  * Reader options: `startingVersion` (default 0 = full history) or
+  * `startingTimestamp`, `maxVersionsPerTrigger` /
+  * `maxFilesPerTrigger` / `maxBytesPerTrigger` (admission control),
   * `skipChangeCommits`. Insert envelopes — the hot path — read
   * through Spark's VECTORIZED parquet reader with the envelope
   * constants riding the partition-value mechanism; replay pieces
@@ -47,42 +50,28 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
 
   private def opt(k: String): Option[String] = Option(options.get(k))
   // `startingTimestamp` (Delta's option, inclusive: commits published
-  // at-or-after the instant stream) accepts epoch millis or an ISO
-  // instant / `yyyy-MM-dd HH:mm:ss` wall clock read as UTC; mutually
-  // exclusive with `startingVersion`
+  // at-or-after the instant stream; see Versioned.parseTimestampMillis
+  // for the accepted forms); mutually exclusive with `startingVersion`
   private val startingTs: Option[Long] =
-    opt("startingtimestamp").map { s =>
-      val t = s.trim
-      if (t.matches("\\d+")) t.toLong
-      else try java.time.Instant.parse(t).toEpochMilli
-      catch {
-        case _: java.time.format.DateTimeParseException =>
-          java.time.LocalDateTime.parse(t.replace(' ', 'T'))
-            .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-      }
-    }
-  require(startingTs.isEmpty || opt("startingversion").isEmpty,
+    opt("startingTimestamp").map(Versioned.parseTimestampMillis)
+  require(startingTs.isEmpty || opt("startingVersion").isEmpty,
     "startingVersion and startingTimestamp are mutually exclusive")
   private val startingVersion = startingTs
     .map(Versioned.versionBeforeTimestamp(root, _))
-    .orElse(opt("startingversion").map(_.toLong))
+    .orElse(opt("startingVersion").map(_.toLong))
     .getOrElse(0L)
-  private val maxVersions = opt("maxversionspertrigger")
-    .orElse(opt("maxVersionsPerTrigger")).map(_.toLong)
+  private val maxVersions = opt("maxVersionsPerTrigger").map(_.toLong)
   // file/byte-grain admission (the Delta-source knobs): a micro-batch
   // stops admitting once it holds this many insert FILES / BYTES —
   // a backfill commit drains as several bounded batches through a
   // sub-version offset instead of one giant batch
-  private val maxFiles = opt("maxfilespertrigger")
-    .orElse(opt("maxFilesPerTrigger")).map(_.toInt)
-  private val maxBytes = opt("maxbytespertrigger")
-    .orElse(opt("maxBytesPerTrigger")).map(_.toLong)
+  private val maxFiles = opt("maxFilesPerTrigger").map(_.toInt)
+  private val maxBytes = opt("maxBytesPerTrigger").map(_.toLong)
   maxFiles.foreach(n => require(n > 0, s"maxFilesPerTrigger must be " +
     s"positive, got $n"))
   maxBytes.foreach(n => require(n > 0, s"maxBytesPerTrigger must be " +
     s"positive, got $n"))
-  private val skipChangeCommits = opt("skipchangecommits")
-    .orElse(opt("skipChangeCommits")).exists(_.toBoolean)
+  private val skipChangeCommits = opt("skipChangeCommits").exists(_.toBoolean)
 
   // the projection contract: data columns first, then any of the
   // envelope metadata columns (_change_type, _commit_version)
@@ -344,6 +333,57 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
 
   override def toString: String =
     s"GraftMicroBatchStream($root, from=$startingVersion)"
+}
+
+/** Serves the change-feed envelope on a stream that projects it.
+  * Spark builds a DSv2 micro-batch stream from
+  * `newScanBuilder(options).build()` with no column pruning, so a scan
+  * never learns which metadata columns a query projected; and once
+  * any metadata column is referenced, the analyzer extends a streaming
+  * relation with every one the table declares. This post-hoc
+  * resolution rule closes the gap for [[GraftTable]]: the relation
+  * keeps only the metadata columns the query references, and its table
+  * is rebound to one whose stream serves exactly those envelope
+  * columns after the data columns. `_file`/`_pos` name no row on a
+  * change stream and are refused. Registered in every session by
+  * [[GraftStreamingExtensions]]. */
+object GraftStreamEnvelope
+    extends org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+  import org.apache.spark.sql.catalyst.expressions.AttributeSet
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+  import org.apache.spark.sql.catalyst.util.MetadataColumnHelper
+
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    lazy val referenced = AttributeSet(plan.collect { case p => p.references }
+      .flatMap(_.toSeq))
+    plan.resolveOperatorsUp {
+      case s @ StreamingRelationV2(_, _, t: GraftTable, _, output, _, _, _)
+          if output.exists(_.isMetadataCol) =>
+        val (meta, data) = output.partition(_.isMetadataCol)
+        val kept = meta.filter(referenced.contains)
+        val provenance = kept.map(_.name).filterNot(
+          VersionedSource.envelope.fieldNames.contains)
+        if (provenance.nonEmpty) throw new UnsupportedOperationException(
+          s"${provenance.mkString(", ")}: row provenance columns are not " +
+            s"served on a stream of ${t.name()}; a stream serves the " +
+            "change-feed envelope (_change_type, _commit_version)")
+        val names = kept.map(_.name)
+        if (kept.size == meta.size && t.streamEnvelope == names) s
+        else s.copy(table = t.withStreamEnvelope(names), output = data ++ kept)
+    }
+  }
+}
+
+/** Registers [[GraftStreamEnvelope]] in every Spark session through
+  * Spark's `SparkSessionExtensionsProvider` service loader
+  * (`META-INF/services`), so a stream projects the envelope without
+  * opting into [[graft.GraftExtensions]]. */
+final class GraftStreamingExtensions
+    extends org.apache.spark.sql.SparkSessionExtensionsProvider {
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    ext.injectPostHocResolutionRule(_ => GraftStreamEnvelope)
 }
 
 /** One feed chunk: a whole file plus its envelope recipe.

@@ -831,8 +831,15 @@ final class GraftRowLevelScan(spark: SparkSession, root: String,
     }
   }
 
-  override def description(): String =
-    s"GraftRowLevelScan($root, v$version, ${files.size} files)"
+  // pushed filters shown as Spark's own file scans show them: cut at
+  // spark.sql.maxMetadataStringLength, so a long IN list stays short
+  override def description(): String = {
+    val max = spark.sessionState.conf.maxMetadataStringLength
+    val p = pushed.mkString(", ")
+    s"GraftRowLevelScan($root, v$version, ${files.size} files" +
+      (if (pushed.isEmpty) ")"
+       else s", pushed [${if (p.length <= max) p else p.take(max) + "..."}])")
+  }
 }
 
 /** One byte range of one data file: `[start, start+length)` selects

@@ -1,57 +1,80 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Sink, Source}
+import java.util
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.operators.Versioned
 
-/** `spark.read`/`readStream.format("graft-versioned")` over a
-  * [[Versioned]] manifest-log table — the lakehouse-connector surface
-  * (reference: `pipelines/02-kafka-spark-iceberg/spark/jobs/
-  * silver_transform.py:118-136` reads Iceberg tables through the
-  * DataFrame reader the same way).
+/** `spark.read`/`readStream`/`write`/`writeStream.format("graft-versioned")`
+  * over a [[Versioned]] manifest-log table addressed by its root — the
+  * lakehouse-connector surface (reference: `pipelines/02-kafka-spark-
+  * iceberg/spark/jobs/silver_transform.py:118-136` reads Iceberg tables
+  * through the DataFrame reader the same way).
+  *
+  * A DSv2 `TableProvider`: `getTable` returns the same [[GraftTable]]
+  * the catalog serves, so a path-addressed table reads, streams and
+  * stream-writes on the one native stack — [[GraftScanBuilder]] →
+  * [[GraftRowLevelScan]] (manifest-stats file pruning, deletion vectors
+  * applied in the reader, commit-time statistics),
+  * [[GraftMicroBatchStream]], [[GraftStreamingWrite]].
   *
   * Batch:
   * {{{
   *   spark.read.format("graft-versioned").option("path", root)
-  *     .option("versionAsOf", 3)            // optional time travel
+  *     .option("versionAsOf", 3)            // or timestampAsOf
   *     .load().filter($"k" between (10, 20))
   * }}}
-  * The relation prunes FILES from pushed filters against commit-time
-  * manifest stats before Spark ever lists them (conjunctive
-  * equality/range bounds → [[Versioned.candidateFilesForBounds]]), then
-  * re-applies the full predicates so stats gaps can't change results.
-  * It also reports `sizeInBytes` from the manifest, so a small
-  * versioned dimension auto-broadcasts on metadata instead of a guess.
   *
-  * Streaming (the "table as a stream" lakehouse pattern):
+  * Streaming — the catalog's contract: table ROWS by default (a
+  * row-removing commit fails unless `skipChangeCommits`); projecting
+  * the `_change_type` / `_commit_version` metadata columns makes it the
+  * full change feed:
   * {{{
   *   spark.readStream.format("graft-versioned").option("path", root)
   *     .option("startingVersion", 0)        // default 0: full history
-  *     .option("maxVersionsPerTrigger", 1)  // optional admission cap
-  *     .load()                              // table cols + _change_type
-  * }}}                                      //            + _commit_version
-  * Offsets are manifest versions — already atomic, totally ordered, and
-  * checkpoint-serializable — so a micro-batch is exactly the change
-  * feed of `(start, end]` and replays are version-exact. Merge/delete
-  * versions must have been committed with `cdf = true` (enforced by
-  * [[Versioned.changeFeed]]).
+  *     .load()
+  *     .select($"*", $"_change_type", $"_commit_version")
+  * }}}
   *
-  * V1 `Source` on purpose: `getBatch` returns a DataFrame, so the feed
-  * rides Catalyst's whole parquet scan stack (pushdown, vectorized
-  * read, arbitrary schemas) instead of a hand-rolled row reader.
+  * Batch WRITES stay on [[CreatableRelationProvider]] (see
+  * `createRelation`): the path table declares no `BATCH_WRITE`, which
+  * is what routes every save mode there.
   */
-class VersionedSource extends RelationProvider
-    with CreatableRelationProvider
-    with StreamSourceProvider with StreamSinkProvider
-    with DataSourceRegister {
+class VersionedSource extends TableProvider
+    with CreatableRelationProvider with DataSourceRegister {
 
   override def shortName(): String = VersionedSource.Name
+
+  // writers hand `getTable` the query's schema, so a first write to a
+  // root with no version needs no inference
+  override def supportsExternalMetadata(): Boolean = true
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val root = VersionedSource.path(options)
+    Versioned.tableSchema(VersionedSource.spark, root,
+      Some(VersionedSource.pin(root, options)))
+  }
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: util.Map[String, String]): Table = {
+    val opts = new CaseInsensitiveStringMap(properties)
+    val root = VersionedSource.path(opts)
+    val spark = VersionedSource.spark
+    if (Versioned.latestVersion(root).isEmpty)
+      new GraftUnbornTable(spark, root, schema)
+    else new GraftTable(spark, root, root,
+      Some(VersionedSource.pin(root, opts)), pathAddressed = true)
+  }
 
   /** `df.write.format("graft-versioned")` — the batch write path a
     * Delta switcher expects. SaveMode maps onto the commit verbs:
@@ -66,11 +89,11 @@ class VersionedSource extends RelationProvider
     * none is lost. */
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
       parameters: Map[String, String], data: DataFrame): BaseRelation = {
-    val opts = VersionedSource.normalize(parameters)
+    val opts = new CaseInsensitiveStringMap(parameters.asJava)
     val root = VersionedSource.path(opts)
     val exists = Versioned.latestVersion(root).isDefined
     def csv(k: String): Seq[String] =
-      opts.get(k).map(_.split(",").map(_.trim).toSeq.filter(_.nonEmpty))
+      Option(opts.get(k)).map(_.split(",").map(_.trim).toSeq.filter(_.nonEmpty))
         .getOrElse(Nil)
     mode match {
       case SaveMode.ErrorIfExists if exists =>
@@ -82,110 +105,57 @@ class VersionedSource extends RelationProvider
       case m =>
         Versioned.commit(sqlContext.sparkSession, root, data,
           mode = if (m == SaveMode.Overwrite) "overwrite" else "append",
-          statsCols = csv("statscols"),
-          partitionBy = csv("partitionby"),
-          bloomCols = csv("bloomcols"),
-          mergeSchema = opts.get("mergeschema").exists(_.toBoolean))
+          statsCols = csv("statsCols"),
+          partitionBy = csv("partitionBy"),
+          bloomCols = csv("bloomCols"),
+          mergeSchema = Option(opts.get("mergeSchema")).exists(_.toBoolean))
     }
-    createRelation(sqlContext, parameters)
-  }
-
-  // ------------------------------------------------------------ batch
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val opts = VersionedSource.normalize(parameters)
-    val root = VersionedSource.path(opts)
-    // timestampAsOf (epoch millis or "yyyy-MM-dd HH:mm:ss" UTC)
-    // resolves to a pinned version at planning time — the Delta
-    // TIMESTAMP AS OF surface; exclusive with versionAsOf
-    val byTs = opts.get("timestampasof").map { s =>
-      val millis = s.toLongOption.getOrElse(
-        java.time.LocalDateTime.parse(s.replace(' ', 'T'))
-          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
-      graft.operators.Versioned.versionAsOfTimestamp(root, millis)
+    // Spark only reads the schema back (to re-cache plans over the root)
+    val ctx = sqlContext
+    val written = Versioned.tableSchema(ctx.sparkSession, root, None)
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = written
     }
-    require(byTs.isEmpty || !opts.contains("versionasof"),
-      "set versionAsOf OR timestampAsOf, not both")
-    new VersionedRelation(sqlContext, root,
-      byTs.orElse(opts.get("versionasof").map(_.toLong)))
-  }
-
-  // -------------------------------------------------------- streaming
-  override def sourceSchema(sqlContext: SQLContext,
-      schema: Option[StructType], providerName: String,
-      parameters: Map[String, String]): (String, StructType) = {
-    val opts = VersionedSource.normalize(parameters)
-    val root = VersionedSource.path(opts)
-    (s"${VersionedSource.Name}:$root",
-      VersionedSource.feedSchema(sqlContext.sparkSession, root))
-  }
-
-  override def createSource(sqlContext: SQLContext,
-      metadataPath: String, schema: Option[StructType],
-      providerName: String, parameters: Map[String, String]): Source = {
-    val opts = VersionedSource.normalize(parameters)
-    new VersionedFeedSource(sqlContext.sparkSession,
-      VersionedSource.path(opts),
-      opts.get("startingversion").map(_.toLong).getOrElse(0L),
-      opts.get("maxversionspertrigger").map(_.toLong))
-  }
-
-  /** `writeStream.format("graft-versioned")` — exactly-once commits via
-    * the in-manifest (appId, batchId) guard. Append mode appends;
-    * Complete mode overwrites (each trigger replaces the snapshot — the
-    * aggregate-MV shape). The replay-guard identity defaults to the
-    * checkpoint location, which is exactly the stream identity a
-    * restart reuses; `.option("appId", …)` overrides it. */
-  override def createSink(sqlContext: SQLContext,
-      parameters: Map[String, String], partitionColumns: Seq[String],
-      outputMode: OutputMode): Sink = {
-    val opts = VersionedSource.normalize(parameters)
-    require(partitionColumns.isEmpty,
-      s"${VersionedSource.Name} sink does not support partitionBy")
-    val mode =
-      if (outputMode == OutputMode.Append()) "append"
-      else if (outputMode == OutputMode.Complete()) "overwrite"
-      else throw new IllegalArgumentException(
-        s"${VersionedSource.Name} sink supports Append and Complete, " +
-          s"got $outputMode")
-    val appId = opts.get("appid").orElse(opts.get("checkpointlocation"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"""${VersionedSource.Name} sink needs a replay-guard identity: set
-           |.option("checkpointLocation", …) or .option("appId", …)"""
-          .stripMargin))
-    new VersionedTableSink(sqlContext.sparkSession,
-      VersionedSource.path(opts), appId, mode,
-      opts.get("statscols").map(_.split(",").map(_.trim).toSeq
-        .filter(_.nonEmpty)).getOrElse(Nil),
-      opts.get("mergeschema").exists(_.toBoolean))
   }
 }
 
 object VersionedSource {
   val Name = "graft-versioned"
 
-  private def normalize(parameters: Map[String, String]): Map[String, String] =
-    parameters.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
+  private def spark: SparkSession = SparkSession.active
 
-  private def path(opts: Map[String, String]): String = {
-    val raw = opts.getOrElse("path", throw new IllegalArgumentException(
+  private def path(opts: CaseInsensitiveStringMap): String =
+    Option(opts.get("path")).getOrElse(throw new IllegalArgumentException(
       s"""$Name needs .option("path", <table root>)"""))
-    // the catalog's V1 streaming fallback hands the table LOCATION as a
-    // `file:` URI string (`new Path(v1Table.location).toString`) — the
-    // engine addresses local roots as plain paths, so unwrap it
-    if (raw.startsWith("file:"))
-      try new java.io.File(new java.net.URI(raw)).getPath
-      catch { case _: Exception => raw.stripPrefix("file:") }
-    else raw
+
+  /** The version a read pins: `versionAsOf`, or `timestampAsOf`
+    * resolved to the snapshot current at that instant (the Delta
+    * TIMESTAMP AS OF surface, see [[Versioned.parseTimestampMillis]]),
+    * or the latest. A root with no version fails, naming it. */
+  private def pin(root: String, opts: CaseInsensitiveStringMap): Long = {
+    val latest = Versioned.latestVersion(root).getOrElse(
+      throw new IllegalArgumentException(s"no versions at $root"))
+    val byVersion = Option(opts.get("versionAsOf")).map(_.toLong)
+    val byTs = Option(opts.get("timestampAsOf"))
+    require(byTs.isEmpty || byVersion.isEmpty,
+      "set versionAsOf OR timestampAsOf, not both")
+    byTs.map(s => Versioned.versionAsOfTimestamp(root,
+        Versioned.parseTimestampMillis(s)))
+      .orElse(byVersion).getOrElse(latest)
   }
 
-  /** Stream schema = the table's schema at `version` (latest when
+  /** The CDC envelope a change feed appends to the table's columns. */
+  private[sources] val envelope: StructType = new StructType()
+    .add("_change_type", StringType, nullable = true)
+    .add("_commit_version", LongType, nullable = true)
+
+  /** Change-feed schema = the table's schema at `version` (latest when
     * `None`) + the CDC envelope. */
   def feedSchema(spark: SparkSession, root: String,
       version: Option[Long] = None): StructType =
-    Versioned.tableSchema(spark, root, version)
-      .add("_change_type", StringType, nullable = true)
-      .add("_commit_version", LongType, nullable = true)
+    StructType(Versioned.tableSchema(spark, root, version).fields ++
+      envelope.fields)
 
   /** Pushed conjunctive filters → inclusive per-column intervals for
     * manifest-stats pruning. Only shapes that IMPLY a bound survive
@@ -272,50 +242,6 @@ object VersionedSource {
   }
 }
 
-/** Batch relation over one pinned version of the table. */
-final class VersionedRelation(override val sqlContext: SQLContext,
-    root: String, versionAsOf: Option[Long])
-    extends BaseRelation with PrunedFilteredScan {
-
-  private val spark = sqlContext.sparkSession
-  private val version: Long = versionAsOf
-    .orElse(Versioned.latestVersion(root))
-    .getOrElse(throw new IllegalArgumentException(s"no versions at $root"))
-
-  override val schema: StructType =
-    Versioned.tableSchema(spark, root, Some(version))
-
-  // commit-time truth, not an estimate: Σ live file bytes from the
-  // manifest — this is what lets Catalyst broadcast a small versioned
-  // dimension without AQE having to discover the size at runtime
-  override def sizeInBytes: Long = Versioned.tableBytes(root, version)
-
-  // every filter is re-applied by Spark above the scan: stats pruning
-  // (files) and the translated in-scan predicates (row groups) are
-  // both strictly advisory, so stats gaps can never change results
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
-
-  // the scan below already produces InternalRows from the native
-  // parquet exec; declaring needConversion=false skips the per-row
-  // external↔internal round-trip the V1 default would add (the
-  // documented BaseRelation contract for exactly this case)
-  override def needConversion: Boolean = false
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    val pruned = Versioned.candidateFilesForBounds(root, version,
-      VersionedSource.bounds(filters.toIndexedSeq))
-    val base = Versioned.readVersionFiles(spark, root, version, pruned)
-    val filtered = filters.toIndexedSeq.flatMap(VersionedSource.toColumn)
-      .foldLeft(base)(_ filter _)
-    filtered.select(requiredColumns.toIndexedSeq.map(col): _*)
-      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
-
-  override def toString: String =
-    s"VersionedRelation($root, v$version)"
-}
-
 /** Version offset: the manifest version the batch read UP TO
   * (inclusive) — the table's own commit log is the stream's WAL. */
 final case class VersionOffset(v: Long) extends OffsetV1 {
@@ -332,89 +258,4 @@ final case class VersionOffset(v: Long) extends OffsetV1 {
 final case class VersionFileOffset(v: Long, idx: Long) extends OffsetV1 {
   require(idx >= 0, s"partial offset needs idx >= 0, got $idx")
   override def json(): String = s"$v:$idx"
-}
-
-/** The V1 streaming source over [[Versioned.changeFeed]]. A micro-batch
-  * `(start, end]` is the exact row-level change feed of those versions;
-  * `maxVersionsPerTrigger` caps how many versions one trigger admits. */
-final class VersionedFeedSource(spark: SparkSession, root: String,
-    startingVersion: Long, maxVersionsPerTrigger: Option[Long])
-    extends Source {
-
-  override val schema: StructType = VersionedSource.feedSchema(spark, root)
-
-  // the highest version already handed to the engine (planned or
-  // recovered); the engine re-calls getBatch for the last batch on
-  // restart BEFORE polling getOffset again — the documented V1
-  // contract Kafka's source relies on — so this re-syncs past the
-  // checkpoint and a rate-limited restart can never re-admit or skip
-  @volatile private var lastPlanned: Long = startingVersion
-
-  private def ver(o: OffsetV1): Long = o.json().toLong
-
-  override def getOffset: Option[OffsetV1] = {
-    val latest = Versioned.latestVersion(root).getOrElse(return None)
-    val target = maxVersionsPerTrigger
-      .map(n => math.min(latest, lastPlanned + math.max(1L, n)))
-      .getOrElse(latest)
-    if (target > lastPlanned) lastPlanned = target
-    if (lastPlanned > startingVersion) Some(VersionOffset(lastPlanned))
-    else None
-  }
-
-  override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
-    val from = start.map(ver).getOrElse(startingVersion)
-    val to = ver(end)
-    lastPlanned = math.max(lastPlanned, to) // restart re-sync
-    // schema is pinned at stream start. HISTORY older than the pin is
-    // fine — versions from before a column existed null-fill into the
-    // pinned schema, exactly like time travel. But once a version
-    // EVOLVES PAST the pin (a column or type the pinned schema doesn't
-    // have), the run must FAIL (a restart re-pins), never silently
-    // drop or mistype drifted columns — the lakehouse-source contract.
-    // Shapes are (name, type) pairs: nullability flags legitimately
-    // drift between manifests (joins/unions relax them).
-    def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType.sql))
-    val pinned = shape(schema).toSet
-    val now = VersionedSource.feedSchema(spark, root, Some(to))
-    if (!shape(now).forall(pinned.contains)) throw new IllegalStateException(
-      s"schema of versioned table at $root changed by version $to " +
-        s"(stream started on ${schema.simpleString}, table is now " +
-        s"${now.simpleString}); restart the streaming query to pick " +
-        "up the new schema")
-    val feed = Versioned.alignTo(
-      Versioned.changeFeed(spark, root, from, Some(to)), schema)
-    GraftShims.internalCreateDataFrame(spark,
-      feed.queryExecution.toRdd, schema, isStreaming = true)
-  }
-
-  override def stop(): Unit = ()
-
-  override def toString: String =
-    s"VersionedFeedSource($root, from=$startingVersion)"
-}
-
-/** The V1 streaming sink: every micro-batch is one atomic manifest
-  * commit with the (appId, batchId) replay guard riding IN it
-  * ([[Versioned.commitIfNew]]) — a replayed batch is recognized from
-  * the table's own log and skipped, so the sink is exactly-once with
-  * no side ledger that could diverge from the data under a crash. */
-final class VersionedTableSink(spark: SparkSession, root: String,
-    appId: String, mode: String, statsCols: Seq[String],
-    mergeSchema: Boolean) extends Sink {
-
-  override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    // the incremental frame arrives isStreaming=true and can't be
-    // written directly; re-wrap its physical plan as a batch frame
-    // (the standard V1 sink hop — toRdd executes lazily, once)
-    val batch = GraftShims.internalCreateDataFrame(spark,
-      data.queryExecution.toRdd, data.schema, isStreaming = false)
-    Versioned.commitIfNew(spark, root, batch, appId, batchId,
-      statsCols = statsCols, mode = mode, mergeSchema = mergeSchema)
-  }
-
-  override def name(): String = s"${VersionedSource.Name}:$root"
-
-  override def toString: String =
-    s"VersionedTableSink($root, $mode, appId=$appId)"
 }

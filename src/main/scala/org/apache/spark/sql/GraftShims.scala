@@ -17,14 +17,6 @@ import org.apache.spark.sql.classic.ExpressionUtils
 trait GraftStreamingUpdateAsAppend
   extends org.apache.spark.sql.internal.connector.SupportsStreamingUpdateAsAppend
 
-/** Public face of Spark's `private[sql]` V1-streaming-fallback table
-  * trait (`V2TableWithV1Fallback` — what Delta's table extends so
-  * `readStream.table` / `writeStream.toTable` route through a V1
-  * streaming source/sink): a DSv2 table extending this and providing
-  * `v1Table` gets the analyzer's fallback resolution verbatim. */
-trait GraftV1FallbackTable
-  extends org.apache.spark.sql.connector.catalog.V2TableWithV1Fallback
-
 object GraftShims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -38,16 +30,6 @@ object GraftShims {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** DataFrame over an InternalRow RDD with `isStreaming` set — the
-    * contract a V1 streaming `Source.getBatch` must satisfy (the engine
-    * asserts it); same hop `FileStreamSource` takes internally. */
-  def internalCreateDataFrame(spark: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType,
-      isStreaming: Boolean): DataFrame =
-    spark.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming)
 
   /** Register a SQL function on a LIVE session's function registry —
     * extensions bind at session build; this is the post-hoc path. */

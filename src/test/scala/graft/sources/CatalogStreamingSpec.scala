@@ -357,6 +357,27 @@ class CatalogStreamingSpec extends SparkSpec {
     assert(Versioned.read(spark, sink).count() === 3L)
   }
 
+  test("readStream.table with the envelope metadata columns projected " +
+      "is the change feed") {
+    sql("CREATE NAMESPACE IF NOT EXISTS grafts.st")
+    sql("CREATE TABLE grafts.st.envp (id BIGINT, v STRING)")
+    val root = s"$warehouse/st/envp"
+    sql("INSERT INTO grafts.st.envp VALUES (1, 'a'), (2, 'b')")
+    Versioned.mergeUpsert(spark, root,
+      Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), "id", cdf = true)
+    val q = spark.readStream.table("grafts.st.envp")
+      .select("id", "v", "_change_type", "_commit_version")
+      .writeStream.format("memory").queryName("envp")
+      .trigger(Trigger.AvailableNow()).start()
+    q.processAllAvailable(); q.stop()
+    val expected = Versioned.changeFeed(spark, root, 0)
+      .select("id", "v", "_change_type", "_commit_version")
+      .as[(Long, String, String, Long)].collect().toSet
+    assert(spark.table("envp").as[(Long, String, String, Long)]
+      .collect().toSet === expected)
+    assert(expected.exists(_._3 == "update_preimage"))
+  }
+
   test("the .changes metadata table: native streaming AND batch reads " +
       "equal changeFeed across every commit kind") {
     sql("CREATE NAMESPACE IF NOT EXISTS grafts.st")

@@ -444,14 +444,15 @@ class GraftCatalogSpec extends SparkSpec {
     // the data value, not a file path, filters and projects
     assert(sql("SELECT id FROM graftc.shadow.t WHERE _file = 'b.csv'")
       .as[Long].collect().toSeq === Seq(2L))
-    // the shadowed name leaves the metadata face; `_pos` stays
+    // the shadowed name leaves the metadata face; `_pos` and the
+    // streaming envelope stay
     val t = new GraftCatalog
     t.initialize("graftc", new org.apache.spark.sql.util
       .CaseInsensitiveStringMap(java.util.Map.of("warehouse", warehouse)))
     val meta = t.loadTable(org.apache.spark.sql.connector.catalog
         .Identifier.of(Array("shadow"), "t"))
       .asInstanceOf[GraftTable].metadataColumns().map(_.name()).toSeq
-    assert(meta === Seq("_pos"))
+    assert(meta === Seq("_pos", "_change_type", "_commit_version"))
   }
 
   test("catalog calls resolve a session with none active or default") {

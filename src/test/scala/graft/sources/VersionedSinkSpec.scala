@@ -74,6 +74,8 @@ class VersionedSinkSpec extends SparkSpec {
     def replicate(): Unit = {
       val q = spark.readStream.format(VersionedSource.Name)
         .option("path", a).load()
+        // the change feed: the envelope metadata columns projected
+        .select(col("*"), col("_change_type"), col("_commit_version"))
         // replicate the post-state rows: inserts + update postimages
         .filter(col("_change_type").isin("insert", "update_postimage"))
         .select("id", "tag", "_commit_version")

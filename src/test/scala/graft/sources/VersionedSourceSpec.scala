@@ -9,14 +9,17 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.operators.Versioned
 
-/** The `graft-versioned` data source. Batch: reads ≡ the Versioned
-  * API, time travel via versionAsOf, pushed filters prune FILES from
-  * manifest stats (asserted on the translation AND the candidate set)
-  * while results stay exact, sizeInBytes comes from the manifest so a
-  * small table broadcasts. Streaming: micro-batches are the exact
-  * change feed, offsets are versions, checkpoint restart is
-  * exactly-once, maxVersionsPerTrigger splits versions across
-  * triggers. */
+/** The `graft-versioned` data source: a DSv2 `TableProvider` over the
+  * catalog's `GraftTable`. Batch: reads ≡ the Versioned API, time
+  * travel via versionAsOf/timestampAsOf, a filtered read plans the
+  * native `BatchScan` whose pushed filters prune FILES from manifest
+  * stats (asserted on the translation AND the candidate set) while
+  * results stay exact, scan statistics come from the manifest so a
+  * small table broadcasts. Streaming: table rows by default; with the
+  * `_change_type`/`_commit_version` metadata columns projected,
+  * micro-batches are the exact change feed, offsets are versions,
+  * checkpoint restart is exactly-once, maxVersionsPerTrigger splits
+  * versions across triggers. */
 class VersionedSourceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -45,6 +48,50 @@ class VersionedSourceSpec extends SparkSpec {
       .option("path", root).option("versionAsOf", 1).load()
     assert(v1.as[(Long, String)].collect().toSet ===
       (0L until 10L).map(i => (i, s"row$i")).toSet)
+  }
+
+  test("time travel by timestampAsOf accepts an ISO instant; " +
+      "versionAsOf with timestampAsOf is refused") {
+    val root = threeRangeTable()
+    def at(k: String, v: String) = spark.read.format(VersionedSource.Name)
+      .option("path", root).option(k, v).load()
+    val now = java.time.Instant.now()
+    assert(at("timestampAsOf", now.toString).count() === 30L)
+    assert(at("timestampAsOf", now.toEpochMilli.toString).count() === 30L)
+    // before the first commit there is no snapshot
+    val early = intercept[IllegalArgumentException] {
+      at("timestampAsOf", "2001-01-01T00:00:00Z").count()
+    }
+    assert(early.getMessage.contains("predates"), early.getMessage)
+    val both = intercept[IllegalArgumentException] {
+      spark.read.format(VersionedSource.Name).option("path", root)
+        .option("versionAsOf", 1).option("timestampAsOf", now.toString)
+        .load()
+    }
+    assert(both.getMessage.contains(
+      "set versionAsOf OR timestampAsOf, not both"), both.getMessage)
+  }
+
+  test("a filtered read plans the native DSv2 BatchScan, no V1 relation") {
+    val root = threeRangeTable()
+    val df = spark.read.format(VersionedSource.Name).option("path", root)
+      .load().filter(col("id") >= 10L && col("id") <= 12L)
+    val plan = df.queryExecution.executedPlan
+    val scans = plan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    assert(scans.size === 1, plan.toString)
+    assert(scans.head.scan.isInstanceOf[GraftRowLevelScan], plan.toString)
+    val desc = scans.head.scan.description()
+    // the pushed range is visible, and it pruned two of three files
+    assert(desc.contains("1 files") && desc.contains("GreaterThanOrEqual(id,10)") &&
+      desc.contains("LessThanOrEqual(id,12)"), desc)
+    assert(df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+    }.isEmpty, df.queryExecution.optimizedPlan.toString)
+    assert(!plan.toString.contains("Relation"), plan.toString)
+    assert(df.as[(Long, String)].collect().map(_._1).sorted.toSeq ===
+      Seq(10L, 11L, 12L))
   }
 
   test("pushed filters translate to stats bounds and prune files") {
@@ -162,17 +209,82 @@ class VersionedSourceSpec extends SparkSpec {
   test("sizeInBytes is manifest truth and small tables broadcast") {
     val root = threeRangeTable()
     val v = Versioned.latestVersion(root).get
-    val rel = new VersionedRelation(spark.sqlContext, root, Some(v))
-    assert(rel.sizeInBytes === Versioned.tableBytes(root, v))
-    assert(rel.sizeInBytes > 0L)
-    // a few KB of dimension ⇒ Catalyst picks broadcast from metadata
     val dim = spark.read.format(VersionedSource.Name).option("path", root).load()
+    val scan = dim.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2ScanRelation => r.scan
+    }.get
+    val stats = scan.asInstanceOf[
+      org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      .estimateStatistics()
+    val (bytes, rows) = Versioned.tableStats(root, v)
+    assert(stats.sizeInBytes().getAsLong === bytes)
+    assert(stats.numRows().getAsLong === rows)
+    assert(bytes > 0L && rows === 30L)
+    // a few KB of dimension ⇒ Catalyst picks broadcast from metadata
     val fact = spark.range(1000).withColumnRenamed("id", "id")
     val plan = fact.join(dim, "id").queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"no broadcast in:\n$plan")
   }
 
+  test("write failure paths: save() on an unborn root creates it, " +
+      "then refuses; Ignore is a no-op; a read of an unborn root names it") {
+    val root = freshRoot()
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format(VersionedSource.Name).option("path", root).load()
+    }
+    assert(e.getMessage.contains(s"no versions at $root"), e.getMessage)
+    val df = (1 to 5).map(i => (i.toLong, "x")).toDF("id", "tag")
+    df.write.format(VersionedSource.Name).option("path", root).save()
+    assert(Versioned.versions(root) === Seq(1L))
+    val again = intercept[Throwable] {
+      df.write.format(VersionedSource.Name).option("path", root).save()
+    }
+    assert(again.getMessage.contains("already exists"), again.getMessage)
+    df.write.format(VersionedSource.Name).option("path", root)
+      .mode("ignore").save()
+    assert(Versioned.versions(root) === Seq(1L))
+  }
+
+  test("a first Complete-mode writeStream to an unborn root commits, " +
+      "and a restart that re-runs the epoch commits nothing") {
+    val src = Files.createTempDirectory("graft-vsrc-csrc").toString
+    val root = freshRoot()
+    val ck = Files.createTempDirectory("graft-vsrc-cck").toString
+    Seq(("a", 1L), ("b", 2L), ("a", 3L)).toDF("k", "v")
+      .write.mode("overwrite").parquet(src)
+    def run(): Unit = {
+      val q = spark.readStream
+        .schema(spark.read.parquet(src).schema).parquet(src)
+        .groupBy("k").agg(sum("v").as("total"))
+        .writeStream.format(VersionedSource.Name).outputMode("complete")
+        .option("path", root).option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow()).start()
+      q.processAllAvailable(); q.stop()
+    }
+    run()
+    assert(Versioned.versions(root) === Seq(1L))
+    assert(Versioned.read(spark, root).as[(String, Long)].collect().toSet ===
+      Set(("a", 4L), ("b", 2L)))
+    // a crash between the sink's commit and the checkpoint's: the
+    // restart re-runs epoch 0 under the query id the checkpoint keeps,
+    // and the (queryId, epochId) guard in the manifest skips it
+    Seq("commits/0", "commits/.0.crc").foreach(f => new java.io.File(ck, f).delete())
+    run()
+    assert(Versioned.versions(root) === Seq(1L),
+      "a replayed epoch must not commit again")
+    assert(Versioned.read(spark, root).as[(String, Long)].collect().toSet ===
+      Set(("a", 4L), ("b", 2L)))
+  }
+
   // -------------------------------------------------------- streaming
+
+  /** The change feed of a path stream: the table's columns plus the
+    * projected envelope metadata columns. */
+  private def feed(root: String, opts: (String, String)*) =
+    spark.readStream.format(VersionedSource.Name).option("path", root)
+      .options(opts.toMap).load()
+      .select(col("*"), col("_change_type"), col("_commit_version"))
 
   /** commit → merge(cdf) → delete(cdf): versions 1..3. */
   private def cdcTable(): String = {
@@ -188,10 +300,48 @@ class VersionedSourceSpec extends SparkSpec {
     root
   }
 
+  test("a path stream serves rows by default, on the native DSv2 stream") {
+    val root = cdcTable()
+    var sourceDesc: Seq[String] = Nil
+    def rows(opts: (String, String)*): Set[(Long, String)] = {
+      val name = s"vrows_${System.nanoTime()}"
+      val q = spark.readStream.format(VersionedSource.Name)
+        .option("path", root).options(opts.toMap).load()
+        .writeStream.format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.processAllAvailable()
+      finally {
+        sourceDesc = q.recentProgress.toSeq.flatMap(_.sources.map(_.description))
+        q.stop()
+      }
+      spark.table(name).as[(Long, String)].collect().toSet
+    }
+    // v2 is a merge: a row stream cannot represent its removals
+    val e = intercept[Exception](rows())
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(m => Option(m.getMessage).getOrElse(""))
+      .mkString(" | ")
+    assert(msgs.contains("skipChangeCommits"), msgs)
+    assert(rows("skipChangeCommits" -> "true") ===
+      (1 to 4).map(i => (i.toLong, "a")).toSet)
+    assert(sourceDesc.nonEmpty &&
+      sourceDesc.forall(_.contains("GraftMicroBatchStream")), sourceDesc)
+    // row provenance has no meaning on a stream
+    val prov = intercept[Exception] {
+      spark.readStream.format(VersionedSource.Name).option("path", root)
+        .load().select(col("id"), col("_file"))
+    }
+    assert(Iterator.iterate(prov: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(
+        _.contains("row provenance columns are not served"))), prov)
+    // the row stream of the appends after v3 only
+    Versioned.commit(spark, root, Seq((20L, "z")).toDF("id", "tag"))
+    assert(rows("startingVersion" -> "3") === Set((20L, "z")))
+  }
+
   test("streamed feed equals the batch change feed") {
     val root = cdcTable()
-    val q = spark.readStream.format(VersionedSource.Name)
-      .option("path", root).load()
+    val q = feed(root)
       .writeStream.format("memory").queryName("vfeed")
       .trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable(); q.stop()
@@ -210,8 +360,7 @@ class VersionedSourceSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-vsrc-out").toString
     val ck = Files.createTempDirectory("graft-vsrc-ck").toString
     def drain(): Unit = {
-      val q = spark.readStream.format(VersionedSource.Name)
-        .option("path", root).load()
+      val q = feed(root)
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ck)
         .trigger(Trigger.AvailableNow()).start()
@@ -236,8 +385,7 @@ class VersionedSourceSpec extends SparkSpec {
     val root = freshRoot()
     Versioned.commit(spark, root, Seq((1L, "a")).toDF("id", "tag"),
       statsCols = Seq("id"))
-    val q = spark.readStream.format(VersionedSource.Name)
-      .option("path", root).load()
+    val q = feed(root)
       .writeStream.format("memory").queryName("vfeed_evo").start()
     try {
       q.processAllAvailable() // drains v1 under the pinned schema
@@ -251,8 +399,7 @@ class VersionedSourceSpec extends SparkSpec {
     } finally q.stop()
     // a fresh start sees the evolved schema and replays the history
     // aligned to it (v1's insert null-fills the new column)
-    val q2 = spark.readStream.format(VersionedSource.Name)
-      .option("path", root).load()
+    val q2 = feed(root)
       .writeStream.format("memory").queryName("vfeed_evo2")
       .trigger(Trigger.AvailableNow()).start()
     q2.processAllAvailable(); q2.stop()
@@ -271,8 +418,7 @@ class VersionedSourceSpec extends SparkSpec {
       statsCols = Seq("id"))
     Versioned.commit(spark, root,
       Seq((2L, "b", 1.5)).toDF("id", "tag", "w"), mergeSchema = true)
-    val q = spark.readStream.format(VersionedSource.Name)
-      .option("path", root).option("maxVersionsPerTrigger", 1).load()
+    val q = feed(root, "maxVersionsPerTrigger" -> "1")
       .writeStream.format("memory").queryName("vfeed_prepin").start()
     try {
       q.processAllAvailable()
@@ -285,8 +431,7 @@ class VersionedSourceSpec extends SparkSpec {
 
   test("maxVersionsPerTrigger admits one version per micro-batch") {
     val root = cdcTable()
-    val q = spark.readStream.format(VersionedSource.Name)
-      .option("path", root).option("maxVersionsPerTrigger", 1).load()
+    val q = feed(root, "maxVersionsPerTrigger" -> "1")
       .writeStream.format("memory").queryName("vfeed_rate").start()
     try {
       q.processAllAvailable()
