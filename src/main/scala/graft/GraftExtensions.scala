@@ -43,11 +43,33 @@ import graft.functions.expressions.{BloomFilter, CmsSketch, DotProduct, HistQuan
   * or by naming any `file:` classes in a `core-site.xml`, which skips
   * the install. It is per JVM: cluster executors keep Hadoop's default
   * unless their own configuration names `graft.io.NioLocalFileSystem`.
+  *
+  * Both routes also make `spark.sql.artifact.isolation.enabled=false`
+  * the JVM default, as a system property set only when the JVM has none.
+  * Spark defaults it to `true`, and Structured Streaming clones the
+  * session for every query start. Under isolation each clone runs its
+  * tasks under its own class loader, and `CodeGenerator` caches compiled
+  * classes per (class loader, code), so every `AvailableNow` run
+  * compiled all of its generated classes again: 11 for Silver and 11 for
+  * the Gold MV per medallion operation, against 3 and 0 with one loader
+  * (bench/codegen_reuse.md). The engine adds no session artifacts
+  * (jars, files, classes) for isolation to keep apart. A `-D` property,
+  * a builder `.config` or a `--conf` value wins; opt out with
+  * {{{
+  *   --conf spark.sql.artifact.isolation.enabled=true
+  * }}}
+  * Spark reads the key from the SparkConf when it builds a context or
+  * a session. `withExtensions` runs `apply` before `getOrCreate` builds
+  * its SparkConf, so the default reaches that session and every session
+  * cloned from it. Through `spark.sql.extensions` or `registerFunctions`
+  * the context is already running and keeps the value it started with;
+  * pass the key explicitly there.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.io.NioLocalFs.install()
+    GraftExtensions.shareSessionClassLoader()
     // Scale-safety rewrite: SUM(x) OVER () → broadcast one-row aggregate
     // (an unpartitioned window serializes the dataset through one task;
     // see graft.plans.RewriteGlobalWindowTotals).
@@ -175,11 +197,22 @@ object GraftExtensions {
       (children: Seq[Expression]) => MgSketch(children(0),
         intArg(children(1)))))
 
+  /** Spark's session artifact isolation switch (see [[GraftExtensions]]). */
+  private[graft] val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
+  /** Makes `false` the JVM default for [[ArtifactIsolation]], so a session
+    * and the clones Structured Streaming makes of it share one task class
+    * loader and so one generated-class cache. A value the JVM already
+    * has is kept. */
+  private[graft] def shareSessionClassLoader(): Unit =
+    System.getProperties.putIfAbsent(ArtifactIsolation, "false")
+
   /** Register the function set on a live session (idempotent — the
     * registry overwrites by identifier), and install the engine's `file:`
-    * filesystem (see [[GraftExtensions]]). */
+    * filesystem and session class loader default (see [[GraftExtensions]]). */
   def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
     graft.io.NioLocalFs.install()
+    shareSessionClassLoader()
     functions.foreach { case (id, inf, builder) =>
       org.apache.spark.sql.GraftShims.registerFunction(spark, id, inf, builder)
     }

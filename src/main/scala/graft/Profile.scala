@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Measurement harness (optimization guide §1): runs named queries under
@@ -10,6 +11,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * shuffle bytes, spill — via a SparkListener. wall·cores vs Σ task time
   * separates "the computation is expensive" from "the plan has too many
   * serialized stages / tiny tasks" (the two need different fixes).
+  * `cg` counts the generated classes Janino compiled during the reported
+  * (second, warm) pass: a warm pass that still compiles generates code
+  * that differs per run, or lost its classes from Spark's class cache.
   *
   * Usage: SPARK_GRAFT_SF_DIR=… runMain graft.Profile [query ...]
   * (no args = the full catalog). Prints one aligned row per query.
@@ -58,7 +62,7 @@ object Profile {
     val fns = SparkEntry.queries
     println(f"${"query"}%-30s ${"wall_s"}%8s ${"jobs"}%5s ${"stgs"}%5s " +
       f"${"tasks"}%6s ${"task_s"}%8s ${"gc_s"}%6s ${"shR_MB"}%7s " +
-      f"${"shW_MB"}%7s ${"spill_MB"}%8s ${"in_MB"}%7s")
+      f"${"shW_MB"}%7s ${"spill_MB"}%8s ${"in_MB"}%7s ${"cg"}%4s")
     // two passes per query, SECOND reported (codegen/JIT warm — matches
     // the bench's min-of-two discipline closely enough for attribution)
     names.foreach { n =>
@@ -70,16 +74,18 @@ object Profile {
       spark.catalog.clearCache()
       Thread.sleep(200) // let straggler listener events drain
       reset()
+      val cg0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[profile] $n failed: ${e.getMessage}") }
       val wall = (System.nanoTime() - t0) / 1e9
+      val cg = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cg0
       Thread.sleep(200)
       println(f"$n%-30s $wall%8.3f ${jobs.get}%5d ${stages.get}%5d " +
         f"${tasks.get}%6d ${taskMs.get / 1e3}%8.2f ${gcMs.get / 1e3}%6.2f " +
         f"${shufR.get / 1e6}%7.1f ${shufW.get / 1e6}%7.1f " +
-        f"${spill.get / 1e6}%8.1f ${input.get / 1e6}%7.1f")
+        f"${spill.get / 1e6}%8.1f ${input.get / 1e6}%7.1f $cg%4d")
     }
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions must register on a FRESH session (functions are bound
@@ -21,6 +22,38 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Runs `body` with the JVM's artifact isolation property set to
+    * `value` (or absent), restoring what was there before. */
+  private def withIsolationProperty(value: Option[String])(body: => Unit): Unit = {
+    val key = GraftExtensions.ArtifactIsolation
+    def put(v: Option[String]): Unit = v match {
+      case Some(x) => System.setProperty(key, x)
+      case None => System.clearProperty(key)
+    }
+    val before = sys.props.get(key)
+    put(value)
+    try body finally put(before)
+  }
+
+  test("apply makes artifact isolation off the JVM default; an explicit SparkConf value wins") {
+    val key = GraftExtensions.ArtifactIsolation
+    withIsolationProperty(None) {
+      assert(!new SparkConf().contains(key))
+      new GraftExtensions().apply(new SparkSessionExtensions)
+      assert(new SparkConf().get(key) === "false")
+      assert(new SparkConf().set(key, "true").get(key) === "true")
+    }
+  }
+
+  test("apply keeps an artifact isolation value the JVM already has") {
+    val key = GraftExtensions.ArtifactIsolation
+    withIsolationProperty(Some("true")) {
+      new GraftExtensions().apply(new SparkSessionExtensions)
+      assert(sys.props(key) === "true")
+      assert(new SparkConf().get(key) === "true")
+    }
   }
 
   test("global-window totals rewrite to a broadcast aggregate (no Window node)") {
